@@ -9,7 +9,10 @@ A result file is what `run.py --save DIR` writes. For each (workload,
 metric) the table shows each side's median and quartiles, B's median
 relative to A's, and whether the two medians agree within the bound that
 BENCHMARK.json fixes for the metric. The box's steal fraction is shown
-per side, so that a comparison made on a noisy box is visible as such.
+per side, so that a comparison made on a noisy box is visible as such,
+and so are each side's failed and attempted operations: where B fails a
+larger share of its operations than A, every verdict of that workload is
+"invalid", since a failing operation can be faster than a correct one.
 
 With `--run`, the two checkouts are first run on every seed, alternating
 which side goes first (A B, B A, A B, ...), and their result files land
@@ -24,6 +27,9 @@ import subprocess
 import sys
 
 HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, HERE)
+
+import layers  # noqa: E402
 
 
 def load(d):
@@ -42,18 +48,24 @@ def quartiles(values):
 
 
 def bounds():
-    path = os.path.join(HERE, "..", "BENCHMARK.json")
-    with open(path) as f:
-        spec = json.load(f)
-    return {m["name"]: m for m in spec["end_to_end"]}
+    return {m["name"]: m for m in layers.SPEC["end_to_end"]}
+
+
+def failures(runs):
+    """(failed, attempted) operations over a side's runs."""
+    return sum(r["failed"] for r in runs), sum(r["attempted"] for r in runs)
 
 
 def compare(a_runs, b_runs, spec):
-    rows = []
+    """Rows of the table, and per workload each side's (failed,
+    attempted) plus whether B's larger failure share voids the verdicts."""
+    rows, fails = [], {}
     workloads = sorted({r["details"]["workload"] for r in a_runs + b_runs})
     for w in workloads:
         a = [r for r in a_runs if r["details"]["workload"] == w]
         b = [r for r in b_runs if r["details"]["workload"] == w]
+        fa, fb = failures(a), failures(b)
+        invalid = fb[0] * max(1, fa[1]) > fa[0] * max(1, fb[1])
         names = sorted(set().union(*(r["metrics"] for r in a + b)))
         for name in names + ["box.steal_frac"]:
             def vals(runs):
@@ -68,6 +80,8 @@ def compare(a_runs, b_runs, spec):
             m = spec.get(name)
             if m is None:
                 verdict = ""
+            elif invalid:
+                verdict = "invalid"
             elif abs(rel) <= m["bound"]:
                 verdict = "agree"
             else:
@@ -75,10 +89,11 @@ def compare(a_runs, b_runs, spec):
                 verdict = "worse" if worse else "better"
             rows.append((w, name, qa, qb, rel, m["bound"] if m else None, verdict,
                          len(va), len(vb)))
-    return rows
+        fails[w] = (fa, fb, invalid)
+    return rows, fails
 
 
-def show(rows):
+def show(rows, fails):
     print(f"{'workload':16} {'metric':14} {'A q1/med/q3':>28} {'B q1/med/q3':>28} "
           f"{'B/A-1':>8} {'bound':>6}  verdict  n")
     for w, name, qa, qb, rel, bound, verdict, na, nb in rows:
@@ -86,6 +101,9 @@ def show(rows):
         fb = "/".join(f"{x:.4g}" for x in qb)
         fbnd = f"{bound:.2f}" if bound is not None else ""
         print(f"{w:16} {name:14} {fa:>28} {fb:>28} {rel:>+8.3f} {fbnd:>6}  {verdict:7}  {na}/{nb}")
+    for w, (fa, fb, invalid) in fails.items():
+        print(f"{w:16} failed/attempted: A {fa[0]}/{fa[1]}, B {fb[0]}/{fb[1]}"
+              + ("  -- B fails more: comparison invalid" if invalid else ""))
 
 
 def seeds(spec):
@@ -123,7 +141,7 @@ def main():
         dirs = [os.path.join(a.out, "a"), os.path.join(a.out, "b")]
     else:
         dirs = a.sides
-    show(compare(load(dirs[0]), load(dirs[1]), bounds()))
+    show(*compare(load(dirs[0]), load(dirs[1]), bounds()))
 
 
 if __name__ == "__main__":

@@ -5,19 +5,16 @@ with the same column names and parquet types as the project's sf0.1
 fixture, from nothing but a seed and a size:
 
   python3 perfbench/gen.py --seed 7 --scale 1 --out DIR
-  python3 perfbench/gen.py --seed 7 --scale 0.25 --files 4 --row-groups 2 \
-      --doc-replicas 4 --out DIR
+  python3 perfbench/gen.py --seed 7 --scale 0.25 --files 4 --row-groups 2 --out DIR
 
 `--scale 1` gives the fixture's sf0.1 row counts (600 k lineitem rows).
 Fact tables (orders, lineitem, events, documents, embeddings) are written
 as one file, or with `--files N` as a directory of N files of
 `--row-groups` row groups each, so that a scan splits into parallel
 tasks. 5 % of documents are near duplicates of an earlier document (its
-text plus the token "dup"), as in the fixture; `--doc-replicas R` appends
-R-1 seed-perturbed copies of documents and embeddings under new ids, near
-but never exact duplicates. The summary printed (and returned by
-`generate`) gives, per table, rows, bytes, files and row groups, and the
-near-duplicate fraction of the documents.
+text plus the token "dup"), as in the fixture. The summary printed (and
+returned by `generate`) gives, per table, rows, bytes, files and row
+groups, and the near-duplicate fraction of the documents.
 
 Money columns are whole cents (two decimals), which `graft.Det`'s exact
 decimal sums rely on. The output is a pure function of the arguments:
@@ -148,7 +145,7 @@ def events(rng, scale):
         "props": pa.array([f'{{"k": {k}}}' for k in rng.integers(0, 100, n)], pa.string())})
 
 
-def documents_embeddings(rng, scale, replicas):
+def documents_embeddings(rng, scale):
     n_doc = max(50, int(5000 * scale))
     n_vec = max(20, int(2000 * scale))
     vocab = np.asarray(WORDS, dtype=object)
@@ -158,40 +155,20 @@ def documents_embeddings(rng, scale, replicas):
     for i in np.flatnonzero(rng.random(n_doc) < 0.05):
         if i > 0:
             toks[i] = toks[rng.integers(0, i)] + ["dup"]
-    lang = pick(rng, LANGS, n_doc, p=LANG_P)
+    text = [" ".join(t) for t in toks]
+    documents = pa.table({
+        "doc_id": pa.array(np.arange(n_doc), pa.int64()),
+        "text": pa.array(text, pa.string()),
+        "lang": pick(rng, LANGS, n_doc, p=LANG_P),
+        "source": pa.array([f"src{i % 20}" for i in range(n_doc)], pa.string()),
+        "n_chars": pa.array([len(s) for s in text], pa.int64())})
     emb = rng.normal(0.0, 0.125, (n_vec, DIM)).astype(np.float32)
-    label = pa.array(rng.integers(0, 10, n_vec), pa.int32())
-    docs, vecs = [], []
-    for r in range(replicas):
-        if r > 0:
-            # a perturbed copy under new ids: about 5 % of each document's
-            # tokens (at least one) replaced by another word, and every
-            # embedding value moved by N(0, 0.01) -- near, never exact,
-            # duplicates of the base rows
-            toks = [perturb(rng, t) for t in toks]
-            emb = (emb + rng.normal(0.0, 0.01, emb.shape)).astype(np.float32)
-        text = [" ".join(t) for t in toks]
-        docs.append(pa.table({
-            "doc_id": pa.array(np.arange(n_doc) + r * n_doc, pa.int64()),
-            "text": pa.array(text, pa.string()),
-            "lang": lang,
-            "source": pa.array([f"src{i % 20}" for i in range(n_doc)], pa.string()),
-            "n_chars": pa.array([len(s) for s in text], pa.int64())}))
-        offsets = pa.array(np.arange(0, n_vec * DIM + 1, DIM, dtype=np.int32))
-        vecs.append(pa.table({
-            "vec_id": pa.array(np.arange(n_vec) + r * n_vec, pa.int64()),
-            "embedding": pa.ListArray.from_arrays(offsets, pa.array(emb.reshape(-1), pa.float32())),
-            "label": label}))
-    return pa.concat_tables(docs), pa.concat_tables(vecs)
-
-
-def perturb(rng, toks):
-    t = list(toks)
-    pos = np.flatnonzero(rng.random(len(t)) < 0.05)
-    for j in pos if len(pos) else [rng.integers(0, len(t))]:
-        k = WORDS.index(t[j]) if t[j] in WORDS else 0
-        t[j] = WORDS[(k + rng.integers(1, len(WORDS))) % len(WORDS)]
-    return t
+    offsets = pa.array(np.arange(0, n_vec * DIM + 1, DIM, dtype=np.int32))
+    embeddings = pa.table({
+        "vec_id": pa.array(np.arange(n_vec), pa.int64()),
+        "embedding": pa.ListArray.from_arrays(offsets, pa.array(emb.reshape(-1), pa.float32())),
+        "label": pa.array(rng.integers(0, 10, n_vec), pa.int32())})
+    return documents, embeddings
 
 
 def write(table, path, files, row_groups):
@@ -215,7 +192,7 @@ def write(table, path, files, row_groups):
     return files, groups
 
 
-def generate(out, seed, scale=1.0, files=1, row_groups=1, doc_replicas=1):
+def generate(out, seed, scale=1.0, files=1, row_groups=1):
     """Write every table under `out`; return a summary per table
     (rows, bytes, files, row groups) plus the near-duplicate fraction."""
     rng = np.random.Generator(np.random.PCG64(seed))
@@ -223,7 +200,7 @@ def generate(out, seed, scale=1.0, files=1, row_groups=1, doc_replicas=1):
     tables["orders"], tables["lineitem"] = orders_lineitem(
         rng, scale, n_cust, n_supp, n_part, price)
     tables["events"] = events(rng, scale)
-    tables["documents"], tables["embeddings"] = documents_embeddings(rng, scale, doc_replicas)
+    tables["documents"], tables["embeddings"] = documents_embeddings(rng, scale)
     os.makedirs(out, exist_ok=True)
     summary = {}
     for name, t in tables.items():
@@ -234,12 +211,8 @@ def generate(out, seed, scale=1.0, files=1, row_groups=1, doc_replicas=1):
                 sum(os.path.getsize(os.path.join(path, f)) for f in os.listdir(path)))
         summary[name] = {"rows": t.num_rows, "bytes": size, "files": nf,
                          "row_groups": ng}
-    # near duplicates: the "dup" copies among the base documents, and every
-    # document of a replica
     text = tables["documents"].column("text").to_pylist()
-    base = len(text) // doc_replicas
-    summary["near_dup_frac"] = (sum(t.endswith(" dup") for t in text[:base]) +
-                                len(text) - base) / len(text)
+    summary["near_dup_frac"] = sum(t.endswith(" dup") for t in text) / len(text)
     return summary
 
 
@@ -250,10 +223,8 @@ def main():
     ap.add_argument("--scale", type=float, default=1.0)
     ap.add_argument("--files", type=int, default=1)
     ap.add_argument("--row-groups", type=int, default=1)
-    ap.add_argument("--doc-replicas", type=int, default=1)
     a = ap.parse_args()
-    print(json.dumps(generate(a.out, a.seed, a.scale, a.files, a.row_groups,
-                              a.doc_replicas), indent=1))
+    print(json.dumps(generate(a.out, a.seed, a.scale, a.files, a.row_groups), indent=1))
 
 
 if __name__ == "__main__":

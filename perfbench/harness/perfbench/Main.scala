@@ -18,16 +18,17 @@ import org.apache.spark.sql.types._
   * operation plus a closing summary line to `--out`:
   *
   *   java ... perfbench.Main --workload hive_catalog_rw --data DIR --work DIR
-  *     --ops FILE --out FILE --passes 4 --warm 1 --trace 0
+  *     --ops FILE --out FILE --passes 6 --warm 3 --trace 0
   *     [--oracle-dir DIR]
   *
   * An operation is one call into a builder (a registry `Decl.fn` or a
   * `graft.HiveTables` function) followed by one action that folds every
   * output row into an order-independent digest: the row count and the
-  * exact sum of `xxhash64` over all columns. With `--warm 1` every
-  * operation first runs once untimed; then the list runs `--passes`
-  * times, timed. With `--trace 1` the scheduler and query-execution
-  * listeners record spans and counters; without it none is registered.
+  * exact sum of `xxhash64` over all columns. The list first runs `--warm`
+  * times untimed (with `--warm 0`, `graft.Bench`'s synthetic warm-up runs
+  * instead); then it runs `--passes` times, timed. With `--trace 1` the
+  * scheduler and query-execution listeners record spans and counters;
+  * without it none is registered.
   * `--oracle-dir` holds DuckDB results (`<key>.parquet`) whose digests
   * are computed after all timing ends, under the same column order and
   * types, so that the caller can compare them with the operations'.
@@ -54,7 +55,7 @@ object Main {
     val work = new File(a("work")).getAbsolutePath
     val passes = a("passes").toInt
     val traced = a.get("trace").contains("1")
-    val warm = a.get("warm").contains("1")
+    val warmPasses = a.getOrElse("warm", "0").toInt
     val ops = Files.readAllLines(Paths.get(a("ops"))).asScala.toSeq
       .filter(_.nonEmpty).map { l =>
         val f = l.split("\t").toSeq
@@ -80,7 +81,7 @@ object Main {
       spark.listenerManager.register(tracer)
     }
     // a cold workload starts where graft.Bench starts its first query
-    if (!warm) warmUp(spark, work)
+    if (warmPasses == 0) warmUp(spark, work)
 
     // catalog layer: register every generated table as a session view,
     // or, for the Hive workload, create its tables in the metastore
@@ -165,7 +166,7 @@ object Main {
       line(out, fields)
     }
 
-    if (warm) ops.foreach(op => runOp(op, 0, timed = false))
+    for (_ <- 1 to warmPasses) ops.foreach(op => runOp(op, 0, timed = false))
     val firstTimedMs = System.currentTimeMillis()
     for (pass <- 1 to passes) {
       val c0 = cpuNs

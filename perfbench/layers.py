@@ -10,11 +10,17 @@ attributed layers and `driver.other_ms` sum to the operation's wall.
   python3 perfbench/layers.py SPANS.jsonl   # self time per layer, per op
 """
 import json
+import os
 import statistics
 import sys
 
-E2E_UNITS = {"setup_s": "s", "total_s": "s", "cpu_s": "s", "op_p50_ms": "ms",
-             "op_tail_ms": "ms", "peak_rss_mb": "MB"}
+from workloads import MEMOIZED
+
+# metric names and units are the ones BENCHMARK.json declares
+with open(os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", "BENCHMARK.json")) as f:
+    SPEC = json.load(f)
+E2E_UNITS = {m["name"]: m["unit"] for m in SPEC["end_to_end"]}
+UNITS = {m["name"]: m["unit"] for m in SPEC["per_layer"]}
 
 # innermost first: a job inside a planning phase inside a builder call
 # is job time
@@ -27,34 +33,12 @@ COUNTS = ["codegen.compiles", "codegen.wsc_ms", "sched.jobs", "sched.stages",
           "shuffle.write_bytes", "shuffle.write_ms", "shuffle.read_bytes",
           "shuffle.fetch_wait_ms", "spill.bytes", "io.input_bytes", "io.input_rows",
           "io.files_read", "io.output_bytes", "jvm.gc_ms"]
-HIVE_CALLS = ["table", "partitions", "read_serde", "create_external", "repair",
-              "write_managed", "insert_dynamic"]
-# the registry modules of the benchmark's queries
-MODULES = ["Relational", "Warehouse", "TpcH", "Stats", "MlPrep", "Windows",
-           "Udx", "SimilarityFitted", "Text", "Dedup"]
-
-UNITS = {"catalog.register_ms": "ms", "catalog.schema_jobs": "count",
-         **{f"hive.{c}_ms": "ms" for c in HIVE_CALLS},
-         "hive.partitions_read_frac": "fraction",
-         "queries.build_ms": "ms", "queries.build_jobs": "count",
-         **{f"queries.{m}_s": "s" for m in MODULES},
-         "memo.hit_frac": "fraction",
-         "catalyst.analysis_ms": "ms", "catalyst.optimization_ms": "ms",
-         "catalyst.planning_ms": "ms",
-         "codegen.compiles": "count", "codegen.wsc_ms": "ms",
-         "sched.jobs": "count", "sched.stages": "count", "sched.tasks": "count",
-         "sched.job_ms": "ms",
-         "task.run_ms": "ms", "task.cpu_ms": "ms", "task.gc_ms": "ms",
-         "task.busy_frac": "fraction",
-         "shuffle.write_bytes": "bytes", "shuffle.write_ms": "ms",
-         "shuffle.read_bytes": "bytes", "shuffle.fetch_wait_ms": "ms",
-         "spill.bytes": "bytes",
-         "io.input_bytes": "bytes", "io.input_rows": "count", "io.files_read": "count",
-         "io.output_bytes": "bytes",
-         "driver.other_ms": "ms", "jvm.gc_ms": "ms",
-         "write.p50_ms": "ms", "write.tail_ms": "ms",
-         "trace.overhead_frac": "fraction",
-         "box.steal_frac": "fraction", "box.load1": "load"}
+# hive.<call>_ms: one per HiveTables call; queries.<Module>_s: op wall of
+# the registry queries declared by that module
+HIVE_CALLS = [n[len("hive."):-len("_ms")] for n in UNITS
+              if n.startswith("hive.") and n.endswith("_ms")]
+MODULES = [n[len("queries."):-len("_s")] for n in UNITS
+           if n.startswith("queries.") and n.endswith("_s")]
 
 TAIL_LADDER = [99.9, 99.0, 95.0, 90.0, 80.0, 75.0, 67.0, 50.0]
 
@@ -155,7 +139,7 @@ def per_layer(jvms):
                 m["queries.build_jobs"] += jobs
                 if r["module"] in MODULES:
                     m[f"queries.{r['module']}_s"] += r["ms"] / 1000.0
-                if r["repeat"]:
+                if r["repeat"] and r["key"] in MEMOIZED:
                     repeats += 1
                     hits += jobs == 0
             m["memo.hit_frac"] = hits / repeats if repeats else 0.0

@@ -126,7 +126,7 @@ def run_jvm(cp, w, data, work, ops, passes, traced, oracle_dir):
         "-XX:+UseParallelGC", "-XX:-UseAdaptiveSizePolicy", f"-Xms{HEAP}", f"-Xmx{HEAP}",
         f"-Djava.io.tmpdir={work}/tmp", "-cp", cp, "perfbench.Main",
         "--workload", w.name, "--data", data, "--work", work, "--ops", ops_file,
-        "--out", out, "--passes", str(passes), "--warm", "1" if w.warm else "0",
+        "--out", out, "--passes", str(passes), "--warm", str(w.warm),
         "--trace", "1" if traced else "0"] +
         (["--oracle-dir", oracle_dir] if oracle_dir else []))
     launch_ms = time.time() * 1000
@@ -152,7 +152,6 @@ def main():
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--save", help="directory to write this run's result file into")
-    ap.add_argument("--keep", action="store_true", help="keep the run's work directory")
     a = ap.parse_args()
 
     t_start = time.time()
@@ -226,8 +225,7 @@ def main():
                 json.dump({**result, "details": details}, f)
         print(json.dumps(result))
     finally:
-        if not a.keep:
-            shutil.rmtree(run_dir, ignore_errors=True)
+        shutil.rmtree(run_dir, ignore_errors=True)
 
 
 if __name__ == "__main__":

@@ -6,6 +6,7 @@ import unittest
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
+import compare  # noqa: E402
 import layers  # noqa: E402
 import oracle  # noqa: E402
 
@@ -61,6 +62,24 @@ class AttributeTest(unittest.TestCase):
         self.assertGreaterEqual(sum(x > v for x in range(1, 121)), 10)
         # too few samples for any tail: the median
         self.assertEqual(layers.tail([4, 1, 3, 2]), (50.0, 2.5, 4))
+
+
+class CompareTest(unittest.TestCase):
+    @staticmethod
+    def run_file(ms, failed):
+        return {"correct": not failed, "attempted": 10, "failed": failed,
+                "metrics": {"op_p50_ms": {"value": ms, "unit": "ms"}},
+                "details": {"workload": "w", "box": {"box.steal_frac": 0.01}}}
+
+    def test_b_failing_more_voids_the_verdict(self):
+        a = [self.run_file(100, 0), self.run_file(102, 0)]
+        b = [self.run_file(50, 1), self.run_file(51, 0)]  # faster, but an op failed
+        rows, fails = compare.compare(a, b, compare.bounds())
+        self.assertEqual([r[6] for r in rows if r[1] == "op_p50_ms"], ["invalid"])
+        self.assertEqual(fails["w"], ((0, 20), (1, 20), True))
+        rows, fails = compare.compare(a, a, compare.bounds())
+        self.assertEqual([r[6] for r in rows if r[1] == "op_p50_ms"], ["agree"])
+        self.assertFalse(fails["w"][2])
 
 
 if __name__ == "__main__":

@@ -19,7 +19,7 @@ class GenTest(unittest.TestCase):
     def test_same_seed_same_bytes_other_seed_other_bytes(self):
         with tempfile.TemporaryDirectory() as t:
             a, b, c = (os.path.join(t, x) for x in "abc")
-            kw = dict(scale=0.05, files=3, row_groups=2, doc_replicas=2)
+            kw = dict(scale=0.05, files=3, row_groups=2)
             sa = gen.generate(a, 1, **kw)
             gen.generate(b, 1, **kw)
             gen.generate(c, 2, **kw)
@@ -34,14 +34,9 @@ class GenTest(unittest.TestCase):
                              sorted(set(gen.FACTS) | {"customer", "supplier", "part"}))
             self.assertEqual(sa["lineitem"]["files"], 3)
             self.assertEqual(sa["lineitem"]["row_groups"], 6)
-            self.assertGreater(sa["near_dup_frac"], 0.5)
-    def test_replicas_are_near_not_exact_duplicates(self):
-        with tempfile.TemporaryDirectory() as t:
-            gen.generate(t, 3, scale=0.05, doc_replicas=2)
-            import pyarrow.parquet as pq
-            text = pq.read_table(os.path.join(t, "documents.parquet")).column("text").to_pylist()
-            n = len(text) // 2
-            self.assertEqual(sum(text[i] == text[n + i] for i in range(n)), 0)
+            # about 5 % of documents are near duplicates, as in the fixture
+            self.assertGreater(sa["near_dup_frac"], 0.01)
+            self.assertLess(sa["near_dup_frac"], 0.1)
 
 
 if __name__ == "__main__":

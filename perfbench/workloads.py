@@ -10,26 +10,44 @@ import random
 
 import gen
 
-# Registry queries whose first execution is timed in `registry_cold`, one
-# per module for ten modules. Left out: queries that only run through
-# graft.Catalog.scratch, a fixed path outside the checkout (the CatalogIO
-# module, bucketed_join, zorder_prune, dq_expectations_route, the
-# catalog-served ANN queries, and tpch_q2/q9/q11/q16/q20, which read a
-# materialized partsupp); queries whose DuckDB replay takes more than a
-# few seconds at this size (dedup_ngram, dedup_near, simjoin_prefix,
-# curation_*); and, for the time budget, the remaining modules.
+# Registry queries whose first execution is timed in `registry_cold`: one
+# per module for 18 modules, and a second TpcH and Text query, so that the
+# median of 20 cold operations is steadier than that of 10. Left out:
+# queries that only run through graft.Catalog.scratch, a fixed path
+# outside the checkout (the CatalogIO module, bucketed_join, zorder_prune,
+# dq_expectations_route, the catalog-served ANN queries, and
+# tpch_q2/q9/q11/q16/q20, which read a materialized partsupp); queries
+# whose DuckDB replay takes more than a few seconds at this size
+# (dedup_ngram, dedup_near, simjoin_prefix, curation_*); and, for the
+# time budget, the rest.
 COLD = [
-    "agg_hash",        # Relational
-    "event_funnel",    # Warehouse
-    "tpch_q3",         # TpcH
-    "agg_gini",        # Stats
-    "target_encode",   # MlPrep
-    "window_rank",     # Windows
-    "group_apply",     # Udx
-    "sim_ann_batch",   # SimilarityFitted: a cold index fit
-    "text_tfidf",      # Text
-    "dedup_exact",     # Dedup
+    "agg_hash",           # Relational
+    "event_funnel",       # Warehouse
+    "tpch_q3",            # TpcH
+    "agg_gini",           # Stats
+    "target_encode",      # MlPrep
+    "window_rank",        # Windows
+    "group_apply",        # Udx
+    "sim_ann_batch",      # SimilarityFitted: a cold index fit
+    "text_tfidf",         # Text
+    "dedup_exact",        # Dedup
+    "time_tumbling",      # TimeWindows
+    "scalar_json",        # Scalars
+    "join_asof",          # AsofRange
+    "sim_topk_cosine",    # Similarity
+    "sketch_hll_merge",   # Sketches
+    "dq_psi",             # Dq
+    "multimodal_decode",  # Multimodal
+    "stream_ohlc",        # StreamingBatch
+    "tpch_q1",            # TpcH
+    "text_stats",         # Text
 ]
+
+# Registry queries whose builder reads a graft.SessionMemo stage (here
+# SimilarityFitted's fitted centroid frame). `hive_catalog_rw` runs them
+# in its warm mix, so a timed call finds the stage and starts no Spark job
+# in the builder: memo.hit_frac counts those calls.
+MEMOIZED = ["sim_ann_batch"]
 
 YEARS = list(range(1995, 2001))  # whole years only: equal-sized partitions
 ORDERS_SQL = ("SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice, "
@@ -40,7 +58,7 @@ CUSTOMER_SQL = "SELECT * FROM customer"
 
 class Workload:
     name = ""
-    warm = False
+    warm = 0  # untimed passes over the operations before the timed ones
 
     def passes(self, seconds):
         """Timed passes for a run of about `seconds`."""
@@ -78,19 +96,28 @@ class RegistryCold(Workload):
 class HiveCatalogRw(Workload):
     """The metastore surface against a fresh embedded-Derby metastore:
     pruned reads, SerDe reads and listings beside managed writes, dynamic
-    inserts, external tables and partition repair, on the same tables."""
+    inserts, external tables and partition repair, on the same tables;
+    plus the memoized registry queries, whose timed calls reuse the stage
+    the warm passes fitted."""
     name = "hive_catalog_rw"
-    warm = True
-    # (kind, partitions it touches): the seed picks which years, never how
-    # many, so every seed does the same work
-    MIX = [("read", 1), ("read", 2), ("serde", 0), ("partitions", 0), ("tables", 0),
-           ("write_managed", 2), ("insert_dynamic", 2), ("repair", 1),
-           ("create_external", 0)]
+    # the JIT keeps speeding a pass up over its first passes (process CPU
+    # per pass fell 14 s, 12 s, 9 s, 9 s, 7 s, ... on a 4-core box), so
+    # three untimed passes put the timed ones past the steepest part
+    warm = 3
+    # (kind, partitions it touches), in the order a pass runs them: each
+    # write is followed by a read of the table it changed. The seed picks
+    # which years, never how many; the order is fixed, because what an
+    # operation costs depends on what ran before it (a write invalidates
+    # the file listings a read would reuse), and a seed-shuffled order made
+    # op_p50_ms spread by 25 % between seeds on a quiet box
+    MIX = [("read", 1), ("write_managed", 2), ("serde", 0), ("insert_dynamic", 2),
+           ("read", 2), ("repair", 1), ("partitions", 0), ("create_external", 0),
+           ("tables", 0)]
 
     def passes(self, seconds):
-        # a pass takes about 3 s on a 4-core box; a fixed count per run
+        # a pass takes about 4 s on a 4-core box; a fixed count per run
         # keeps the sample, and so op_tail_ms's percentile, the same
-        return max(1, round(seconds / 3))
+        return max(1, round(seconds / 2))
 
     def generate(self, data, seed):
         return gen.generate(data, seed, scale=0.25, files=4, row_groups=2)
@@ -101,8 +128,7 @@ class HiveCatalogRw(Workload):
         for kind, n in self.MIX:
             years = [str(y) for y in sorted(rng.sample(YEARS, n))]
             ops.append((kind, "-".join([kind] + years), ",".join(years)) if n else (kind, kind))
-        rng.shuffle(ops)
-        return ops
+        return ops + [("query", q) for q in MEMOIZED]
 
     def oracles(self, ops):
         out = {}
