@@ -17,24 +17,22 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Catalog {
 
-  private val onceKeys =
-    new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
+  private val onceMemo = new SessionMemo[java.lang.Boolean]()
   private val viewsDir = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[SparkSession, String]())
 
-  /** Run `write` once per (session, input dir, key): queries that
+  /** Run `write` once per (SparkContext, input dir, key): queries that
     * materialize a side copy (csv/json/orc/partitioned parquet) re-use
-    * it for the rest of the JVM instead of rewriting identical bytes
-    * per call. The key carries the full input dir — [[scratch]] paths
-    * embed only the sf basename, and two data roots with the same
-    * basename must not share a materialization. computeIfAbsent makes
-    * the guard atomic (no concurrent double-write) and records the key
-    * only if the write SUCCEEDS — a failed write must not poison later
-    * calls into reading a half-written copy. */
+    * it for the rest of the context's life instead of rewriting
+    * identical bytes per call. The key carries the full input dir —
+    * [[scratch]] paths embed only the sf basename, and two data roots
+    * with the same basename must not share a materialization.
+    * computeIfAbsent makes the guard atomic (no concurrent
+    * double-write) and records the key only if the write SUCCEEDS — a
+    * failed write must not poison later calls into reading a
+    * half-written copy. */
   def once(s: SparkSession, dir: String, key: String)(write: => Unit): Unit =
-    onceKeys.computeIfAbsent(
-      s"${s.sparkContext.applicationId}@$dir@$key",
-      _ => { write; java.lang.Boolean.TRUE })
+    onceMemo.getOrCompute(s, dir, key) { write; java.lang.Boolean.TRUE }
 
   /** Register every test table as a temp view of THIS session (temp
     * views are session-scoped — a memo keyed app-wide would silently

@@ -1,6 +1,9 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.catalyst.catalog.CatalogTableType
+import org.apache.spark.sql.execution.command.DDLUtils
 
 /** User-facing facade — the engine's analogue of the reference's single
   * public entry point `table_to_dask(database, table, filters)`:
@@ -158,19 +161,20 @@ object HiveTables {
     * incremental-load contract (a daily job rewrites yesterday's
     * partition without touching history). Spark's default overwrite
     * mode is STATIC (drops every partition first — catastrophic for an
-    * incremental loader), so the dynamic mode is scoped to this call
-    * and restored after. Column order follows the TABLE schema
-    * (insertInto is positional), partition columns last. */
+    * incremental loader), so the write runs in a session clone that
+    * carries the dynamic mode — never in the caller's conf, where
+    * concurrent writers would race on it — and the caller's view of
+    * the table is refreshed after. (The `partitionOverwriteMode` write
+    * option cannot carry it: insertInto drops writer options.) Column
+    * order follows the TABLE schema (insertInto is positional),
+    * partition columns last. */
   def insertDynamic(spark: SparkSession, database: String, name: String,
       df: DataFrame): Unit = {
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "dynamic")
-    try df.write.mode("overwrite").insertInto(s"${q(database)}.${q(name)}")
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+    val table = s"${q(database)}.${q(name)}"
+    org.apache.spark.sql.graftbridge.SessionBridge.withConf(df,
+      Map("spark.sql.sources.partitionOverwriteMode" -> "dynamic"))
+      .write.mode("overwrite").insertInto(table)
+    df.sparkSession.catalog.refreshTable(table)
   }
 
   /** Sync the metastore with partition directories added behind its
@@ -181,9 +185,17 @@ object HiveTables {
       name: String): Unit =
     spark.sql(s"MSCK REPAIR TABLE ${q(database)}.${q(name)}")
 
-  /** List a database's tables (the reference's `get_all_tables`). */
-  def tables(spark: SparkSession, database: String): Seq[String] =
-    spark.catalog.listTables(database).collect().map(_.name).toSeq
+  /** List a database's tables (the reference's `get_all_tables`) as
+    * `spark.catalog.listTables` does, temp views included, but by name
+    * from the session catalog without loading each table's metadata;
+    * any other namespace (qualified, global temp, missing) takes
+    * `listTables` itself, its result or error. */
+  def tables(spark: SparkSession, database: String): Seq[String] = {
+    val catalog = spark.sessionState.catalog
+    if (catalog.databaseExists(database))
+      catalog.listTables(database).map(_.table)
+    else spark.catalog.listTables(database).collect().map(_.name).toSeq
+  }
 
   /** List databases (the reference's `get_all_databases`). */
   def databases(spark: SparkSession): Seq[String] =
@@ -191,9 +203,20 @@ object HiveTables {
 
   /** List a partitioned table's partition specs (the reference's
     * `get_partitions`): rows like `o_year=1996`, straight from the
-    * catalog's partition enumeration (metastore-backed under Hive). */
+    * catalog's partition enumeration (metastore-backed under Hive) as
+    * `SHOW PARTITIONS` lists them, without planning the statement; a
+    * missing, view or unpartitioned table runs it for its error. */
   def partitions(spark: SparkSession, database: String,
-      name: String): Seq[String] =
-    spark.sql(s"SHOW PARTITIONS ${q(database)}.${q(name)}")
+      name: String): Seq[String] = {
+    val catalog = spark.sessionState.catalog
+    val id = TableIdentifier(name, Some(database))
+    val t = if (catalog.tableExists(id)) Some(catalog.getTableMetadata(id))
+      else None
+    if (t.exists(t => t.tableType != CatalogTableType.VIEW &&
+        t.partitionColumnNames.nonEmpty)) {
+      DDLUtils.verifyPartitionProviderIsHive(spark, t.get, "SHOW PARTITIONS")
+      catalog.listPartitionNames(id)
+    } else spark.sql(s"SHOW PARTITIONS ${q(database)}.${q(name)}")
       .collect().map(_.getString(0)).toSeq
+  }
 }

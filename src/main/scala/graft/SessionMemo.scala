@@ -1,46 +1,42 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.SparkContext
 import org.apache.spark.sql.SparkSession
 
-/** Per-SparkContext memo of derived values (checkpointed frames, stage
-  * bundles) — the shared container behind the family memos
-  * (Dedup.frameMemo, Similarity.bitextSideMemo, Curation.stageMemo,
-  * Multimodal's and SimilarityFitted's stage memos).
+/** Per-SparkContext memo of derived values — the one container behind
+  * the family memos (checkpointed frames and stage bundles of Dedup,
+  * Similarity, SimilarityFitted, Curation, Multimodal), the schema memo
+  * of [[Tables.t]] and the [[Catalog.once]] guards.
   *
-  * Why an outer per-context layer (r15 ADVICE): a flat
-  * `ConcurrentHashMap[String, DataFrame]` keyed by
-  * `applicationId@dir@stage` holds strong references for the JVM's
-  * lifetime, so entries referencing STOPPED SparkContexts accumulate —
-  * a test suite that builds many sessions retains every dead context's
-  * checkpointed frames (and through each DataFrame, its whole
-  * SessionState). Scoping the outer map by [[SparkContext]] keeps
-  * today's sharing semantics exactly — all sibling `newSession()`s of
-  * one context share entries, two contexts never do — and the
-  * stopped-context sweep in [[inner]] makes a dead context's whole
-  * entry set collectible (the weak keys alone cannot: see the sweep's
-  * scaladoc for the value→key self-pinning trap).
+  * Why an outer per-context layer (r15 ADVICE): a flat JVM-wide map
+  * retains every STOPPED context's entries (and through each DataFrame
+  * its whole SessionState). Scoping by [[SparkContext]] gives the
+  * sharing rule directly — sibling `newSession()`s of one context share
+  * entries, two contexts never do — and the stopped-context sweep in
+  * [[at]] makes a dead context's entries collectible.
   *
-  * The inner keys keep the established `applicationId@dir@stage`
-  * format: [[Tables.keyCoversTables]]/[[Tables.keyCoversPath]] parse
-  * that shape in the invalidation hooks, and the appId prefix (now
-  * redundant under context scoping) keeps every existing key-format
-  * consumer and DedupSpec's cross-root pins true without change.
+  * Key and invalidation: an entry is keyed by [[SessionMemo.Key]]
+  * (data dir, stage), so two stages over one dir never share an entry.
+  * A memo declares the `tables` its stages read, and
+  * [[Tables.invalidate]]`(path)` drops, in every memo and live context,
+  * each entry whose dir IS `path` or whose dir holds a declared table
+  * that `path` names — its `.parquet` file or anything under it. A
+  * sibling table's rewrite keeps the entry; a memo that declares no
+  * tables is dropped by its own dir only.
   *
-  * Conf capture (r15 ADVICE, documented contract): a memoized frame is
-  * materialized under the FIRST caller's session conf — a caller that
-  * checkpoints under a test-local override (ScaleSpec's 512 KB
-  * maxPartitionBytes) hands that materialization to every later
-  * same-context caller of the same key. That is the memo trade
-  * everywhere in this repo: values must be DETERMINISTIC results, and
-  * conf knobs that change only HOW they materialize (partition sizing)
-  * are acceptable to capture; callers that need conf-pristine frames
-  * use a fresh context or an unmemoized builder. */
-final class SessionMemo[V] {
+  * Conf capture (r15 ADVICE): a memoized frame is materialized under
+  * the FIRST caller's session conf and handed to every later
+  * same-context caller of the key (ScaleSpec's 512 KB
+  * maxPartitionBytes, say). Values must be DETERMINISTIC results; conf
+  * knobs that change only HOW they materialize are acceptable to
+  * capture, and callers that need conf-pristine frames use a fresh
+  * context or an unmemoized builder. */
+final class SessionMemo[V](tables: String*) {
+  import SessionMemo.Key
 
   private val outer = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkContext,
-      java.util.concurrent.ConcurrentHashMap[String, V]]())
+    new java.util.WeakHashMap[SparkContext, ConcurrentHashMap[Key, V]]())
 
   /** Deterministic eviction of dead contexts' entries. The weak keys
     * alone CANNOT collect them: a memoized DataFrame references its
@@ -55,28 +51,43 @@ final class SessionMemo[V] {
     while (it.hasNext) if (it.next().isStopped) it.remove()
   }
 
-  private def inner(
-      sc: SparkContext): java.util.concurrent.ConcurrentHashMap[String, V] =
+  /** The entry map of `s`'s live context: [[getOrCompute]]'s, and the
+    * one callers whose update is not computeIfAbsent (a fingerprint
+    * refresh, a growth guard) use directly, under the same scoping and
+    * invalidation. */
+  private[graft] def at(s: SparkSession): ConcurrentHashMap[Key, V] =
     outer.synchronized {
       sweepStopped()
-      Option(outer.get(sc)).getOrElse {
-        val m = new java.util.concurrent.ConcurrentHashMap[String, V]()
-        outer.put(sc, m)
-        m
-      }
+      outer.computeIfAbsent(s.sparkContext, _ => new ConcurrentHashMap())
     }
 
-  /** Memoized `f` per (live context of `s`, `key`) — atomic per key,
-    * recorded only if `f` succeeds (computeIfAbsent's contract). */
-  def getOrCompute(s: SparkSession, key: String)(f: => V): V =
-    inner(s.sparkContext).computeIfAbsent(key, _ => f)
+  /** Memoized `f` per (live context of `s`, `dir`, `stage`) — atomic
+    * per key, recorded only if `f` succeeds (computeIfAbsent's
+    * contract). */
+  def getOrCompute(s: SparkSession, dir: String, stage: String)(f: => V): V =
+    at(s).computeIfAbsent(Key(dir, stage), _ => f)
 
-  /** Drop every entry (across all live contexts) whose key satisfies
-    * `p` — the invalidation-hook hook point ([[Tables.onInvalidate]]). */
-  def invalidateKeys(p: String => Boolean): Unit = outer.synchronized {
-    outer.values.forEach { m =>
-      val it = m.keySet.iterator()
-      while (it.hasNext) if (p(it.next())) it.remove()
+  private def stale(k: Key, path: String): Boolean =
+    path == k.dir || tables.exists { t =>
+      val file = s"${k.dir}/$t.parquet"
+      path == file || path.startsWith(file + "/")
     }
+
+  private def invalidate(path: String): Unit = outer.synchronized {
+    outer.values.forEach(_.keySet.removeIf(stale(_, path)))
   }
+
+  SessionMemo.all.add(this)
+}
+
+object SessionMemo {
+  final case class Key(dir: String, stage: String)
+
+  private val all = new java.util.concurrent.CopyOnWriteArrayList[
+    SessionMemo[_]]()
+
+  /** Drop every memo's entries that `path` makes stale — the body of
+    * [[Tables.invalidate]]. */
+  private[graft] def invalidate(path: String): Unit =
+    all.forEach(_.invalidate(path))
 }

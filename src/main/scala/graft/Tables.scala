@@ -19,10 +19,10 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Schema memo, keyed like Catalog.once by (appId, path): the first
-    * touch of a table infers its schema from the parquet footer (a
-    * small driver job); every later `t()` passes the cached schema
-    * explicitly, so ResolveDataSource never schedules another
+  /** Schema memo, keyed by (table path, "schema") in a [[SessionMemo]]:
+    * the first touch of a table infers its schema from the parquet
+    * footer (a small driver job); every later `t()` passes the cached
+    * schema explicitly, so ResolveDataSource never schedules another
     * inference job. Measured: schema re-inference was the single
     * largest Catalyst cost in the dedup family's first-touch profile
     * (1.7 s of ResolveDataSource across re-created sources at sf0.1),
@@ -34,10 +34,12 @@ object Tables {
     * inference instead of a silently-stale memo entry — and a rewrite
     * REPLACES the entry (keyed by path alone) instead of minting a new
     * key, so long-lived apps that rewrite fixtures don't grow the map
-    * unboundedly. (Scratch-dir rewrites bypass this memo entirely —
-    * CatalogIO reads its own materializations directly.) */
-  private val schemaMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, org.apache.spark.sql.types.StructType, Long)]()
+    * unboundedly. The memo declares no tables, so [[invalidate]] drops
+    * an entry for its exact table path. (Scratch-dir rewrites bypass
+    * this memo entirely — CatalogIO reads its own materializations
+    * directly.) */
+  private val schemaMemo =
+    new SessionMemo[(String, org.apache.spark.sql.types.StructType, Long)]()
 
   /** Staleness-check TTL: within this window a memo hit trusts its
     * cached fingerprint without touching the filesystem, so the hot
@@ -65,80 +67,31 @@ object Tables {
         .mkString(";")
     else s"${f.lastModified}:${f.length}"
 
-  /** Explicit invalidation hook for in-app rewrites: drops every memo
-    * entry for `path` (all sessions) so the next [[t]] re-infers
-    * immediately instead of trusting the TTL window — the deterministic
-    * companion to the fingerprint check for code that KNOWS it just
-    * rewrote a table (same-size same-tick rewrites are invisible to
-    * any stat-based check). */
-  def invalidate(path: String): Unit = {
-    val it = schemaMemo.keySet.iterator()
-    while (it.hasNext) if (it.next().endsWith(s"@$path")) it.remove()
-    invalidationHooks.forEach(h => h(path))
-  }
-
-  /** Downstream invalidation hooks: the family pipelines (Dedup's
-    * frameMemo, Multimodal's pcaMemo) cache CHECKPOINTED derived frames
-    * keyed by data dir. Dropping only the schema memo on an in-app
-    * rewrite would refresh the schema while stale candidate/covariance
-    * frames keep serving — so [[invalidate]] fans out to every
-    * registered hook with the rewritten path. Hooks register from the
-    * caching object's initializer, which is exactly the right scope: an
-    * object that was never loaded holds no stale frames to drop. */
-  private val invalidationHooks =
-    new java.util.concurrent.CopyOnWriteArrayList[String => Unit]()
-  def onInvalidate(hook: String => Unit): Unit = invalidationHooks.add(hook)
-
-  /** Shared hook predicate: a memo key `app@dir@stage` is stale for an
-    * invalidated `path` when the path IS the dir or sits under it.
-    *
-    * Parse robustness (r12 ADVICE): the first/last-indexOf('@') split
-    * relies ONLY on the application id and the stage token being
-    * '@'-free — Spark app ids are `local-<millis>`/`app-...`/UUID-ish
-    * and every stage token in this repo is a fixed identifier, so a
-    * data DIR containing '@' still brackets correctly (its own '@'s
-    * fall strictly between the first and last). */
-  def keyCoversPath(key: String, path: String): Boolean = {
-    val first = key.indexOf('@')
-    val last = key.lastIndexOf('@')
-    first >= 0 && last > first && {
-      val d = key.substring(first + 1, last)
-      path == d || path.startsWith(d + "/")
-    }
-  }
-
-  /** Table-scoped refinement of [[keyCoversPath]] (r11 ADVICE): a family
-    * memo whose stages read only `tables` should not lose its expensive
-    * checkpointed frames when a SIBLING table in the same dir is
-    * rewritten (invalidating embeddings.parquet used to evict Dedup's
-    * documents-derived candidate frames). Stale iff the invalidated path
-    * is the whole dir, or it touches one of the consumed tables (the
-    * table file itself or anything under it — partitioned layouts).
-    * Same '@'-parse contract as [[keyCoversPath]]: app id and stage
-    * token are '@'-free, so a dir containing '@' still splits right. */
-  def keyCoversTables(key: String, path: String,
-      tables: Seq[String]): Boolean = {
-    val first = key.indexOf('@')
-    val last = key.lastIndexOf('@')
-    first >= 0 && last > first && {
-      val d = key.substring(first + 1, last)
-      path == d || tables.exists(t =>
-        path == s"$d/$t.parquet" || path.startsWith(s"$d/$t.parquet/"))
-    }
-  }
+  /** Explicit invalidation for in-app rewrites: drops every
+    * [[SessionMemo]] entry that `path` makes stale, in all sessions —
+    * this path's schema, so the next [[t]] re-infers immediately
+    * instead of trusting the TTL window, and the family pipelines'
+    * CHECKPOINTED derived frames (Dedup's candidate frames, the PCA
+    * axes, fitted centroids, curation stages), which a schema refresh
+    * alone would leave serving. The deterministic companion to the
+    * fingerprint check for code that KNOWS it just rewrote a table
+    * (same-size same-tick rewrites are invisible to any stat-based
+    * check). See [[SessionMemo]] for which entries a path covers. */
+  def invalidate(path: String): Unit = SessionMemo.invalidate(path)
 
   def t(s: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    val key = s"${s.sparkContext.applicationId}@$path"
+    val memo = schemaMemo.at(s)
+    val key = SessionMemo.Key(path, "schema")
     val now = System.currentTimeMillis()
-    val cached = schemaMemo.get(key)
+    val cached = memo.get(key)
     val sch =
       if (cached != null && now - cached._3 < FpTtlMs) cached._2
       else {
         val fp = fingerprint(new java.io.File(path))
         if (cached != null && cached._1 == fp) {
           // unchanged — refresh the check timestamp only
-          schemaMemo.put(key, (fp, cached._2, now))
+          memo.put(key, (fp, cached._2, now))
           cached._2
         } else {
           // racing threads may both infer — benign, same value wins.
@@ -152,7 +105,7 @@ object Tables {
           val inferred = org.apache.spark.sql.graftbridge.SchemaBridge
             .inferSingleFooter(s, path)
             .getOrElse(s.read.parquet(path).schema)
-          schemaMemo.put(key, (fp, inferred, now))
+          memo.put(key, (fp, inferred, now))
           inferred
         }
       }

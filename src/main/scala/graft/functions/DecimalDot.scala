@@ -132,8 +132,16 @@ object DecimalDot {
       acc = next
       i += 1
     }
-    JBD.valueOf(acc, 12).doubleValue()
+    widen(acc)
   }
+
+  /** The exact scale-12 sum `acc / 10^12` as a double. Below 2^53 both
+    * `acc` and 1e12 are exact doubles, so one IEEE division IS the
+    * correctly rounded quotient — the same bits `BigDecimal.doubleValue`
+    * returns (itself correctly rounded), without allocating it. */
+  private[graft] def widen(acc: Long): Double =
+    if (acc > -(1L << 53) && acc < (1L << 53)) acc.toDouble / 1e12
+    else JBD.valueOf(acc, 12).doubleValue()
 
   /** Exact scale-12 unscaled quantization of one term — the literal
     * semantics of Spark's Cast(double → DECIMAL(26,12)). */

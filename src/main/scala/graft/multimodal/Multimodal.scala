@@ -975,15 +975,18 @@ object Multimodal {
   }
 
   /** Session-scoped memo of the PCA pipeline stages, keyed
-    * (applicationId, data dir, stage) — the Dedup.frameMemo rule: the
+    * (SparkContext, data dir, stage) — the Dedup.frameMemo rule: the
     * three PCA queries (fit / project / project2) each consumed their
     * own PNG-decode + covariance pass (~3.5 s apiece at sf0.1 in the
     * bench JVM) although the frames are identical and
     * checkpoint-backed. Dependencies are resolved BEFORE entering a
     * memo update (nested computeIfAbsent on one map throws
     * "Recursive update" when keys share a bin — the Dedup lesson). */
-  // r16: graft.SessionMemo — weak per-context outer layer (r15 ADVICE)
-  private val pcaMemo = new graft.SessionMemo[AnyRef]
+  // r16: graft.SessionMemo — weak per-context outer layer (r15 ADVICE).
+  // The PCA pipeline reads documents.parquet only, so Tables.invalidate
+  // drops the checkpointed covariance/axis frames for a documents
+  // rewrite (r10 ADVICE) and keeps them for a sibling table's (r11).
+  private val pcaMemo = new graft.SessionMemo[AnyRef]("documents")
 
   /** Memoized [[Tables.spreadIds]] over the documents id column — the
     * shared id source of every synthesized-asset decl. The dense-span
@@ -994,31 +997,15 @@ object Multimodal {
     * caller the same lazy zero-shuffle range (or fallback repartition)
     * plan. Invalidation mirrors pcaMemo: an in-app rewrite of
     * documents.parquet drops the memoized span. */
-  private val idSpreadMemo = new graft.SessionMemo[AnyRef]
-  graft.Tables.onInvalidate { path =>
-    idSpreadMemo.invalidateKeys(
-      graft.Tables.keyCoversTables(_, path, Seq("documents")))
-  }
+  private val idSpreadMemo =
+    new graft.SessionMemo[org.apache.spark.sql.DataFrame]("documents")
   private def spreadDocIds(s: org.apache.spark.sql.SparkSession, d: String)
       : org.apache.spark.sql.DataFrame =
-    idSpreadMemo.getOrCompute(s,
-      s"${s.sparkContext.applicationId}@$d@idspread")(
+    idSpreadMemo.getOrCompute(s, d, "idspread")(
       Tables.spreadIds(Tables.documents(s, d).select(col("doc_id"))))
-      .asInstanceOf[org.apache.spark.sql.DataFrame]
-  // see Dedup.frameMemo: an in-app rewrite routed through
-  // Tables.invalidate drops the checkpointed PCA frames for that dir
-  // instead of serving stale covariance/axis frames (r10 ADVICE)
-  // table-scoped (r11 ADVICE): the PCA pipeline reads documents.parquet
-  // only, so a sibling-table rewrite in the dir keeps the fitted frames
-  graft.Tables.onInvalidate { path =>
-    pcaMemo.invalidateKeys(
-      graft.Tables.keyCoversTables(_, path, Seq("documents")))
-  }
   private def pcaMemoAt[T <: AnyRef](s: org.apache.spark.sql.SparkSession,
       d: String, stage: String)(build: => T): T =
-    pcaMemo.getOrCompute(
-      s, s"${s.sparkContext.applicationId}@$d@$stage")(build)
-      .asInstanceOf[T]
+    pcaMemo.getOrCompute(s, d, stage)(build).asInstanceOf[T]
 
   /** Memoized [[pcaCore]]. */
   private def pcaCoreFor(s: org.apache.spark.sql.SparkSession, d: String)

@@ -73,18 +73,18 @@ object Curation {
       nk: DataFrame, dk: DataFrame, contaminated: DataFrame,
       mw: DataFrame, packs: DataFrame)
 
-  // per-(app, data root) stage-frame memo: the survivor-ID frames are
+  // per-(context, data root) stage-frame memo: the survivor-ID frames are
   // lineage-cut (localCheckpoint) and deterministic, so the pipeline
   // report and the per-language slice share ONE computation of the
   // expensive chain (LSH components, gram joins) instead of paying it
   // per declared query — the same memo discipline as the fitted index.
   // r16: graft.SessionMemo — weak per-context outer layer (r15 ADVICE),
   // see the class scaladoc for the lifetime + conf-capture contract.
-  private val stageMemo = new graft.SessionMemo[Stages]
+  // Every stage reads documents.parquet only.
+  private val stageMemo = new graft.SessionMemo[Stages]("documents")
 
   private[graft] def stages(s: SparkSession, d: String): Stages =
-    stageMemo.getOrCompute(
-      s, s"${s.sparkContext.applicationId}@$d")(stagesUncached(s, d))
+    stageMemo.getOrCompute(s, d, "stages")(stagesUncached(s, d))
 
   private def stagesUncached(s: SparkSession, d: String): Stages = {
     val docs = Tables.documents(s, d)

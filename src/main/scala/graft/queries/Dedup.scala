@@ -443,37 +443,26 @@ object Dedup {
     * pair list, `dedup_incremental`/`dedup_containment`/`dedup_ngram`
     * the LSH candidate blocking — and each recomputed the stage per
     * call (round-6 verdict: ~6-8 s of cross-query waste per JVM at
-    * sf0.1). Keyed by (applicationId, data dir, stage) — the same
+    * sf0.1). Keyed by (SparkContext, data dir, stage) — the same
     * keying rule as `Catalog.once` — so sibling sessions of one app
     * share (the frames are checkpoint-backed RDD blocks, app-wide),
     * while two data roots can never serve each other's frames
     * (DedupSpec pins this). The map holds strong references, keeping
-    * the checkpoints' blocks alive for the JVM; every memoized frame
-    * is candidate/label-cardinality (≪ corpus — tens of KB at sf0.1),
-    * never corpus text. The unkeyed builders ([[candidatePairs]],
+    * the checkpoints' blocks alive for the context's life; every
+    * memoized frame is candidate/label-cardinality (≪ corpus — tens of
+    * KB at sf0.1), never corpus text. The unkeyed builders ([[candidatePairs]],
     * [[nearDupPairs]], [[nearDupComponents]]) stay unmemoized for
     * tests and custom-threshold callers. */
   // r16: graft.SessionMemo — weak per-context outer layer (r15 ADVICE),
   // same sibling-session sharing as before, but a stopped context's
-  // frames become collectible with it.
-  private val frameMemo = new graft.SessionMemo[DataFrame]
-  // Tables.invalidate(path) must drop the derived frames too — a
-  // same-tick in-app rewrite of documents would otherwise keep serving
-  // stale checkpointed candidate/component frames after the schema memo
-  // already refreshed (r10 ADVICE). Registered here so an app that
-  // never touched the dedup family has nothing to invalidate.
-  // Every memoized stage here reads documents.parquet only, so the
-  // fan-out is table-scoped (r11 ADVICE): rewriting a sibling table in
-  // the same dir (embeddings, orders, …) keeps these checkpointed
-  // frames — they were not derived from it and are not stale.
-  Tables.onInvalidate { path =>
-    frameMemo.invalidateKeys(
-      Tables.keyCoversTables(_, path, Seq("documents")))
-  }
+  // frames become collectible with it. Every memoized stage here reads
+  // documents.parquet only, so Tables.invalidate drops these frames for
+  // a documents rewrite (r10 ADVICE) but keeps them when a sibling
+  // table in the same dir is rewritten (r11 ADVICE).
+  private val frameMemo = new graft.SessionMemo[DataFrame]("documents")
   private def memoFrame(s: org.apache.spark.sql.SparkSession, d: String,
       stage: String)(build: => DataFrame): DataFrame =
-    frameMemo.getOrCompute(
-      s, s"${s.sparkContext.applicationId}@$d@$stage")(build)
+    frameMemo.getOrCompute(s, d, stage)(build)
 
   // NOT Tables.spread here (r16, measured): parallelizing the
   // single-file scan helps the crypto-heavy signature map, but this

@@ -200,18 +200,13 @@ object SimilarityFitted {
     * frameMemo rule): three declared queries + the streaming admission
     * gate consume the same fit, which costs one n×cells assignment
     * pass. Frames are single-row and checkpoint-backed. */
-  // r16: graft.SessionMemo — weak per-context outer layer (r15 ADVICE)
-  private val memo = new graft.SessionMemo[DataFrame]
-  // table-scoped invalidation (r11 ADVICE): the fit reads
-  // embeddings.parquet only — a sibling-table rewrite keeps it
-  Tables.onInvalidate { path =>
-    memo.invalidateKeys(
-      Tables.keyCoversTables(_, path, Seq("embeddings")))
-  }
+  // r16: graft.SessionMemo — weak per-context outer layer (r15 ADVICE);
+  // the fits read embeddings.parquet only, so a sibling-table rewrite
+  // keeps them (r11 ADVICE)
+  private val memo = new graft.SessionMemo[DataFrame]("embeddings")
   private def memoAt(s: SparkSession, d: String, stage: String)(
       build: => DataFrame): DataFrame =
-    memo.getOrCompute(
-      s, s"${s.sparkContext.applicationId}@$d@$stage")(build)
+    memo.getOrCompute(s, d, stage)(build)
 
   /** Top-`k` retrieval of query `qid` over `ne` under an ARBITRARY
     * fitted centroid-array frame — the index machinery shared by the
@@ -746,8 +741,7 @@ object SimilarityFitted {
   // drifts off the equal-slice discipline — growth, not only refit,
   // invalidates it); a restarted maintainer recalibrates — the level
   // is derived state, never authoritative
-  private val calMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (Double, Long)]()
+  private val calMemo = new graft.SessionMemo[(Double, Long)]()
 
   /** The admission micro-batch WITH the maintenance policy — index
     * maintenance wired into the streaming ingest loop as a DECLARED
@@ -800,12 +794,13 @@ object SimilarityFitted {
     annIndexBatch(s, d, batch, batchId, indexDir, verdictDir, ledger)
     psiPre.map { psi =>
       val epoch = committedEpoch(s, ledger).map(_._1).getOrElse(-1L)
-      val key = s"${s.sparkContext.applicationId}@$indexDir" +
-        s"@cal$epoch@$calSlices"
+      val calAt = calMemo.at(s)
+      def calKey(e: Long) =
+        graft.SessionMemo.Key(indexDir, s"cal$e@$calSlices")
       // committed rows right now — the growth guard's trigger state
       // (one count over the parquet view, paid only on ticks)
       val viewRows = annIndexView(s, indexDir, ledger).count()
-      val cal = calMemo.compute(key, (_, old) =>
+      val cal = calAt.compute(calKey(epoch), (_, old) =>
         if (old == null || viewRows > 2L * old._2)
           (driftNullLevel(s, d, indexDir, ledger, calSlices), viewRows)
         else old)
@@ -828,8 +823,7 @@ object SimilarityFitted {
           // does NOT carry (new quantizer ⇒ new null level, recomputed
           // at the next tick)
           adv.foreach { e =>
-            calMemo.put(s"${s.sparkContext.applicationId}@$indexDir" +
-              s"@cal$e@$calSlices", cal)
+            calAt.put(calKey(e), cal)
           }
           adv.nonEmpty
         }
@@ -983,7 +977,7 @@ object SimilarityFitted {
     * per (app, root): reruns serve, they don't re-save. */
   /** Recursively delete an orphaned scratch dir left by a STOPPED
     * SparkContext of this same process. [[Catalog.once]] keys on
-    * applicationId while [[Catalog.scratch]] keys on the process pid,
+    * the SparkContext while [[Catalog.scratch]] keys on the process pid,
     * so a fresh context in one JVM re-enters the save guards with the
     * previous context's managed-table dirs still on disk — and a
     * managed CTAS refuses an existing location (LOCATION_ALREADY_

@@ -435,6 +435,86 @@ class CatalogSpec extends AnyFunSuite {
     }
   }
 
+  test("facade listings equal the catalog API and SHOW PARTITIONS, " +
+    "errors included; insertDynamic leaves the session's overwrite " +
+    "mode alone while its tasks run") {
+    SparkSession.getActiveSession.foreach(_.stop())
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val spark = HiveTables.session(appName = "graft-facade-spec",
+      metastoreUris = None, master = "local[2]",
+      localBase = "target/hive_facade")
+    spark.conf.set("spark.sql.shuffle.partitions", "2")
+    try {
+      val sf = new SparkSuite {}.sf // the shared fixture root
+      val db = "f_db"
+      spark.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
+      spark.sql(s"CREATE DATABASE $db")
+      val byYear = Tables.orders(spark, sf)
+        .withColumn("o_year", year(col("o_orderdate")))
+      HiveTables.writeManaged(spark, db, "orders_m", byYear, Seq("o_year"))
+      HiveTables.writeManaged(spark, db, "orders_s",
+        byYear.withColumn("o_status", col("o_orderstatus")),
+        Seq("o_year", "o_status"))
+      HiveTables.writeManaged(spark, db, "cust", Tables.customer(spark, sf))
+      spark.sql(s"CREATE VIEW $db.cust_v AS SELECT * FROM $db.cust")
+      Tables.nation(spark, sf).createOrReplaceTempView("tv_nation")
+
+      // same names in the same order, the temp view included
+      val api = spark.catalog.listTables(db).collect().map(_.name).toSeq
+      assert(HiveTables.tables(spark, db) == api)
+      assert(api.contains("tv_nation") && api.contains("cust_v"), api)
+      for (t <- Seq("orders_m", "orders_s")) {
+        val sql = spark.sql(s"SHOW PARTITIONS $db.$t")
+          .collect().map(_.getString(0)).toSeq
+        assert(sql.nonEmpty && HiveTables.partitions(spark, db, t) == sql)
+      }
+      // and the same errors: a missing database, a missing, view or
+      // unpartitioned table
+      def err(f: => Any): (Class[_], String, Any) =
+        intercept[Exception](f) match {
+          case e: org.apache.spark.sql.AnalysisException =>
+            // the message embeds the statement's plan, whose expression
+            // ids differ per run
+            (e.getClass, e.getCondition, e.getMessageParameters)
+          case e => (e.getClass, e.getMessage, null)
+        }
+      assert(err(HiveTables.tables(spark, "no_db")) ==
+        err(spark.catalog.listTables("no_db").collect()))
+      for (t <- Seq("missing", "cust", "cust_v", "tv_nation"))
+        assert(err(HiveTables.partitions(spark, db, t)) ==
+          err(spark.sql(s"SHOW PARTITIONS $db.$t").collect()), t)
+
+      // insertDynamic's dynamic mode is scoped to its write: the
+      // session conf read while the write's tasks run is the session's
+      // own value
+      val key = "spark.sql.sources.partitionOverwriteMode"
+      spark.conf.set(key, "static")
+      OverwriteModeProbe.session = spark
+      OverwriteModeProbe.seen.clear()
+      val probe = udf { (_: Long) =>
+        OverwriteModeProbe.seen.add(
+          OverwriteModeProbe.session.conf.get(key).toLowerCase)
+        true
+      }
+      val y = byYear.select(min(col("o_year"))).head.getInt(0)
+      val others = spark.table(s"$db.orders_m")
+        .filter(col("o_year") =!= y).count()
+      HiveTables.insertDynamic(spark, db, "orders_m",
+        byYear.filter(col("o_year") === y).filter(probe(col("o_orderkey"))))
+      import scala.jdk.CollectionConverters._
+      assert(OverwriteModeProbe.seen.asScala.toSet == Set("static"))
+      assert(spark.table(s"$db.orders_m")
+        .filter(col("o_year") =!= y).count() == others,
+        "untouched partitions must keep their data (dynamic, not static)")
+    } finally {
+      OverwriteModeProbe.session = null
+      spark.stop()
+      SparkSession.clearActiveSession()
+      SparkSession.clearDefaultSession()
+    }
+  }
+
   test("catalog serving never mutates the caller's session (r15 verdict " +
     "item 3): a bucketed_join planned AFTER a serve in the same root " +
     "session still consumes bucketed scans; degenerate serve inputs " +
@@ -657,4 +737,11 @@ class CatalogSpec extends AnyFunSuite {
     }
   }
 
+}
+
+/** What a write's tasks read from the session conf — see the facade
+  * test's insertDynamic probe. */
+object OverwriteModeProbe {
+  @volatile var session: SparkSession = _
+  val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
 }

@@ -75,4 +75,37 @@ class DecimalDotSpec extends AnyFunSuite with SparkSuite {
     }
     assert(e.getMessage != null)
   }
+
+  test("widening the exact sum: the double division ≡ BigDecimal's " +
+      "doubleValue, bit for bit") {
+    import graft.functions.DecimalDot.widen
+    def viaBigDecimal(acc: Long): Double =
+      java.math.BigDecimal.valueOf(acc, 12).doubleValue()
+    def same(acc: Long): Unit = assert(
+      java.lang.Double.doubleToRawLongBits(widen(acc)) ==
+        java.lang.Double.doubleToRawLongBits(viaBigDecimal(acc)), s"acc=$acc")
+    val top = (1L << 53) - 1
+    Seq(0L, 1L, -1L, top, -top, top + 1, -top - 1, (1L << 52) - 1,
+      1L << 52, (1L << 52) + 1, Long.MaxValue, Long.MinValue,
+      999999999999L, 1000000000000L, 1000000000001L).foreach(same)
+    val rnd = new scala.util.Random(53)
+    // uniform bits at every magnitude, across the 2^53 switch
+    (1 to 20000).foreach { _ =>
+      same(rnd.nextLong() >> rnd.nextInt(64))
+    }
+    // sums whose quotient sits next to a midpoint between two doubles:
+    // the unscaled value nearest (d + ulp(d)/2) · 10^12, and its
+    // neighbours
+    (1 to 20000).foreach { _ =>
+      val d = math.pow(10, rnd.nextDouble() * 7 - 3) // 1e-3 … 1e4
+      val mid = new java.math.BigDecimal(d)
+        .add(new java.math.BigDecimal(math.ulp(d) / 2))
+        .movePointRight(12)
+        .setScale(0, java.math.RoundingMode.HALF_EVEN).longValueExact()
+      (-2L to 2L).foreach { o =>
+        val acc = if (rnd.nextBoolean()) mid + o else -(mid + o)
+        same(acc)
+      }
+    }
+  }
 }

@@ -5,13 +5,24 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The explicit in-app invalidation path (r10 verdict item 8 + ADVICE):
   * `Tables.invalidate(path)` must (a) serve the rewritten schema on the
-  * very next read — no TTL wait — and (b) fan out to the family memos
-  * (Dedup.frameMemo, Multimodal.pcaMemo) that cache CHECKPOINTED frames
-  * derived from the table, which the schema memo alone cannot refresh. */
+  * very next read — no TTL wait — and (b) reach every [[SessionMemo]]
+  * that caches CHECKPOINTED frames derived from the table (Dedup,
+  * Multimodal PCA, Similarity's bitext sides, Curation's stages), which
+  * the schema memo alone cannot refresh. */
 class TablesInvalidateSpec extends AnyFunSuite with SparkSuite {
 
   private def tmpRoot(): String =
     Files.createTempDirectory("graft_inval").toFile.getAbsolutePath
+
+  /** A fresh data root holding copies of the named sf0.001 tables. */
+  private def copyOf(tables: String*): String = {
+    val dir = tmpRoot()
+    tables.foreach { t =>
+      Files.copy(java.nio.file.Paths.get(s"$sf/$t.parquet"),
+        java.nio.file.Paths.get(s"$dir/$t.parquet"))
+    }
+    dir
+  }
 
   test("invalidate serves a same-tick rewrite's schema with no sleep") {
     val dir = tmpRoot()
@@ -47,7 +58,7 @@ class TablesInvalidateSpec extends AnyFunSuite with SparkSuite {
     assert(!(graft.queries.Dedup.candidatePairsFor(spark, dir) eq f1),
       "stale dedup candidate frame served after invalidate")
     // an invalidation for an unrelated root must NOT drop the rebuilt
-    // frame (keyCoversPath scopes the fan-out per data dir)
+    // frame (the memo scopes invalidation per data dir)
     val f2 = graft.queries.Dedup.candidatePairsFor(spark, dir)
     Tables.invalidate(s"${tmpRoot()}/documents.parquet")
     assert(graft.queries.Dedup.candidatePairsFor(spark, dir) eq f2,
@@ -72,7 +83,7 @@ class TablesInvalidateSpec extends AnyFunSuite with SparkSuite {
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val fit = SparkEntry.queries("multimodal_pca_fit")
     val before = fit(spark, dir).collect().toSeq
-    // rewrite with a different corpus; without the pcaMemo hook the
+    // rewrite with a different corpus; without the pcaMemo invalidation the
     // memoized covariance/axis frames would keep serving the old fit
     docs.where("doc_id % 7 = 3").limit(60)
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -83,30 +94,75 @@ class TablesInvalidateSpec extends AnyFunSuite with SparkSuite {
       "PCA fit unchanged after the corpus was rewritten + invalidated")
   }
 
+  test("invalidate drops Similarity's memoized bitext side frame " +
+      "for an embeddings rewrite") {
+    val dir = copyOf("embeddings")
+    // the side frames filter the memoized checkpoint: its plan is the
+    // side frame's child
+    def side() = graft.queries.Similarity
+      .bitextSidesAndCandidates(spark, dir)._1.queryExecution.logical
+      .children.head
+    val e1 = side()
+    assert(side() eq e1, "memo miss on an unchanged dir")
+    Tables.invalidate(s"$dir/documents.parquet")
+    assert(side() eq e1, "sibling-table invalidate evicted the side frame")
+    Tables.invalidate(s"$dir/embeddings.parquet")
+    assert(!(side() eq e1), "stale bitext side frame served after invalidate")
+  }
+
+  test("invalidate rebuilds Curation's memoized stages for a documents " +
+      "rewrite") {
+    val dir = copyOf("documents")
+    val st = graft.queries.Curation.stages(spark, dir)
+    assert(graft.queries.Curation.stages(spark, dir) eq st,
+      "memo miss on an unchanged dir")
+    Tables.invalidate(s"$dir/embeddings.parquet")
+    assert(graft.queries.Curation.stages(spark, dir) eq st,
+      "sibling-table invalidate evicted the curation stages")
+    Tables.invalidate(s"$dir/documents.parquet")
+    assert(!(graft.queries.Curation.stages(spark, dir) eq st),
+      "stale curation stages served after invalidate")
+  }
+
   test("SessionMemo: sibling sessions of one context share entries, " +
-    "invalidateKeys is predicate-scoped, failed computes don't poison") {
-    val m = new SessionMemo[String]
+    "invalidation is dir- and table-scoped, failed computes don't poison") {
+    val m = new SessionMemo[String]("documents")
+    val (dir, other) = (tmpRoot(), tmpRoot())
     var builds = 0
     def build(v: String): String = { builds += 1; v }
-    assert(m.getOrCompute(spark, "k1")(build("v1")) == "v1")
+    assert(m.getOrCompute(spark, dir, "a")(build("v1")) == "v1")
     // same context, same key: memoized (a sibling newSession shares —
     // the Dedup.frameMemo contract: checkpoint blocks are app-wide)
     val sibling = spark.newSession()
-    assert(m.getOrCompute(sibling, "k1")(build("OTHER")) == "v1")
+    assert(m.getOrCompute(sibling, dir, "a")(build("OTHER")) == "v1")
     assert(builds == 1)
-    // predicate invalidation drops exactly the matching keys
-    assert(m.getOrCompute(spark, "k2")(build("v2")) == "v2")
-    m.invalidateKeys(_ == "k1")
-    assert(m.getOrCompute(spark, "k2")(build("OTHER")) == "v2",
-      "non-matching key must survive invalidateKeys")
-    assert(m.getOrCompute(spark, "k1")(build("v1b")) == "v1b",
-      "matching key must recompute after invalidateKeys")
+    // the key is (dir, stage): another stage or another dir is its own
+    // entry
+    assert(m.getOrCompute(spark, dir, "b")(build("v2")) == "v2")
+    assert(m.getOrCompute(spark, other, "a")(build("w1")) == "w1")
+    // a table the memo does not declare leaves its entries alone
+    Tables.invalidate(s"$dir/embeddings.parquet")
+    assert(m.getOrCompute(spark, dir, "a")(build("OTHER")) == "v1",
+      "an undeclared table's invalidate dropped the entry")
+    // anything under a declared table drops every stage of that dir,
+    // and only that dir
+    Tables.invalidate(s"$dir/documents.parquet/lang=en")
+    assert(m.getOrCompute(spark, other, "a")(build("OTHER")) == "w1",
+      "another dir's entry must survive the invalidate")
+    assert(m.getOrCompute(spark, dir, "a")(build("v1b")) == "v1b",
+      "a declared table's invalidate must drop the entry")
+    assert(m.getOrCompute(spark, dir, "b")(build("v2b")) == "v2b",
+      "a declared table's invalidate must drop every stage of the dir")
+    // the whole-dir form drops the dir's entries whatever they read
+    Tables.invalidate(other)
+    assert(m.getOrCompute(spark, other, "a")(build("w1b")) == "w1b",
+      "whole-dir invalidate must drop the entry")
     // computeIfAbsent contract: a THROWING compute records nothing,
     // the next call retries (the Catalog.once poisoning rule)
     intercept[RuntimeException] {
-      m.getOrCompute(spark, "k3")(throw new RuntimeException("boom"))
+      m.getOrCompute(spark, dir, "c")(throw new RuntimeException("boom"))
     }
-    assert(m.getOrCompute(spark, "k3")(build("v3")) == "v3",
+    assert(m.getOrCompute(spark, dir, "c")(build("v3")) == "v3",
       "a failed compute must not poison the key")
   }
 
