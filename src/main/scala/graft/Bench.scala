@@ -1,30 +1,5 @@
 package graft
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import java.util.concurrent.atomic.AtomicLong
-
-/** Accumulates executor task wall-time and JVM GC time across all tasks.
-  * Snapshot deltas around a query give its TRUE compute cost next to
-  * driver-observed wall time, which makes in-suite load artifacts
-  * self-diagnosing (VERDICT r7 item 1): on a 32-thread local session a
-  * healthy query has task_sec ≈ wall × utilized-cores; an externally
-  * loaded box shows wall ≫ task_sec/cpus with low gc — the
-  * tpch_q17/q20-class anomaly becomes a one-glance diagnosis instead of
-  * an after-the-fact isolated re-run. */
-private final class TaskClock extends SparkListener {
-  val runMs = new AtomicLong(0L)
-  val gcMs = new AtomicLong(0L)
-  val cpuNs = new AtomicLong(0L)
-  override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-    val m = te.taskMetrics
-    if (m != null) {
-      runMs.addAndGet(m.executorRunTime)
-      gcMs.addAndGet(m.jvmGCTime)
-      cpuNs.addAndGet(m.executorCpuTime)
-    }
-  }
-  def snap: (Long, Long, Long) = (runMs.get, gcMs.get, cpuNs.get)
-}
 
 object Bench {
   /** 1-minute load average sampled from /proc — the box-load witness
@@ -37,11 +12,13 @@ object Bench {
 
   /** Drain the listener bus between queries so a slow query's task-end
     * events are never charged to the next query's metric window;
-    * degrades gracefully to ±timeout on a jammed bus. */
+    * degrades to ±timeout on a jammed bus, and says so. */
   private def drain(spark: SparkSession): Unit =
     try org.apache.spark.graftbridge.ListenerBridge
       .waitUntilEmpty(spark.sparkContext, 10000)
-    catch { case _: Throwable => () }
+    catch { case e: java.util.concurrent.TimeoutException =>
+      System.err.println(s"[bench] listener bus not drained: ${e.getMessage}")
+    }
 
   /** INTERLEAVED A/B bench (r15 verdict item 5): the box this suite
     * benches on has CPU-frequency PHASES (~±25% over tens of minutes,
@@ -126,7 +103,9 @@ object Bench {
     println(line)
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("BENCH_SELF_AB.json"), line + "\n")
-    catch { case _: Throwable => () }
+    catch { case e: java.io.IOException =>
+      System.err.println(s"[bench] BENCH_SELF_AB.json not written: $e")
+    }
     System.err.println(line)
   }
 
@@ -136,43 +115,15 @@ object Bench {
       case None => ()
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Sort-based shuffle writer everywhere (r16): the bypass-merge
-      // writer opens ONE FILE PER REDUCE PARTITION per map task —
-      // M×R file creations per shuffle — and only ever runs when
-      // R ≤ 200, i.e. exactly the local/toy regime; every production
-      // shuffle (R > 200) already takes the sort/serialized writer's
-      // one-spill-file-per-task path. Forcing it here makes local
-      // execution scale-faithful and removes the file-churn floor the
-      // in-process stack sampler measured under every small shuffle
-      // (guide §2.2: many small blocks). Overridable via env.
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "1"))
-      // Generated-class cache sized to the workload (r17): the default
-      // 100-entry cache thrashes under a 306-query registry — an INFO
-      // profile counted 3293 janino compiles (48 s serialized on the
-      // executing thread) of which ~960 were EVICTION re-compiles of
-      // code the session had already built (10k-entry run: 2330
-      // compiles / 42 s — the rest is genuinely unique code). Any
-      // long-lived production driver running a many-query workload
-      // wants this sized likewise; it trades a few tens of MB of
-      // driver class storage, changes no generated code and no plan.
-      // Static conf, so it must be set before the session exists.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "10000"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = GraftSession.mainCpus
+    val spark = GraftSession.builder(cpus).getOrCreate()
     // SPARK_GRAFT_LOGLEVEL=INFO: per-job forensics (DAGScheduler "took"
     // lines, codegen compile times) for isolated profiling runs; the
     // driver harness leaves it unset (WARN).
     spark.sparkContext.setLogLevel(
       sys.env.getOrElse("SPARK_GRAFT_LOGLEVEL", "WARN"))
-    val clock = new TaskClock
-    spark.sparkContext.addSparkListener(clock)
+    val tally = new TaskTally
+    spark.sparkContext.addSparkListener(tally)
     // a failed query must read as -1, not as a (misleadingly fast)
     // elapsed time — exceptions can fire in milliseconds.
     // sorted order: map iteration order is hash-random, which would move
@@ -254,7 +205,7 @@ object Bench {
       val runs = (1 to repeat).map { i =>
         drain(spark)
         val ld = load1
-        val (r0, g0, c0) = clock.snap
+        val s0 = tally.snap
         val t0 = System.nanoTime()
         val sec =
           try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
@@ -263,8 +214,8 @@ object Bench {
             -1.0
           }
         drain(spark)
-        val (r1, g1, c1) = clock.snap
-        (sec, (r1 - r0) / 1e3, (g1 - g0) / 1e3, (c1 - c0) / 1e9, ld)
+        val d = tally.snap - s0
+        (sec, d.runMs / 1e3, d.gcMs / 1e3, d.cpuNs / 1e9, ld)
       }
       if (takeMin && repeat > 1) {
         val ok = runs.filter(_._1 >= 0)
@@ -319,7 +270,9 @@ object Bench {
         java.nio.file.Paths.get("BENCH_SELF.json"), headline + "\n")
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get("BENCH_SELF_FULL.json"), fullLine + "\n")
-    } catch { case _: Throwable => () }
+    } catch { case e: java.io.IOException =>
+      System.err.println(s"[bench] BENCH_SELF*.json not written: $e")
+    }
     spark.stop()
     println(headline)
     // Exactly ONE stderr copy, as the very last statement after

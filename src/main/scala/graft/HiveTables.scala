@@ -40,13 +40,18 @@ object HiveTables {
     * `hive.metastore.uris` conf differs — so the Derby-backed
     * CatalogSpec exercises exactly what a remote HMS would serve.
     * Default uris come from `HIVE_METASTORE_URIS` in the environment,
-    * the deployment-friendly knob. */
+    * the deployment-friendly knob. The rest of the conf is
+    * [[GraftSession]]'s, with one shuffle partition per `local[n]`
+    * thread (per available core for any other master). */
   def session(appName: String = "graft",
       metastoreUris: Option[String] = sys.env.get("HIVE_METASTORE_URIS"),
       master: String = "local[*]",
       localBase: String = "spark-warehouse-hive"): SparkSession = {
-    val b = SparkSession.builder().appName(appName).master(master)
-      .config("spark.sql.session.timeZone", "UTC")
+    val cpus = (master match {
+      case s"local[$n]" => n.toIntOption
+      case _ => None
+    }).getOrElse(Runtime.getRuntime.availableProcessors)
+    val b = GraftSession.builder(cpus).appName(appName).master(master)
       .config("spark.sql.warehouse.dir", s"$localBase/warehouse")
     val withCatalog = metastoreUris match {
       case Some(uris) => b.config("hive.metastore.uris", uris)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Writes PLANS.md: the formatted physical plans of the headline
@@ -9,8 +8,11 @@ import org.apache.spark.sql.execution.ExplainMode
   * scan, dimensions broadcast, top-k as TakeOrdered, co-located
   * bucketed joins, whole-stage codegen spans). PlanAuditSpec asserts
   * these shapes continuously; this artifact makes them reviewable.
+  * Each plan is the EXECUTED one (count() first, so AQE finalizes).
+  * An optional comma-separated query list replaces the headline set,
+  * for per-query before/after evidence of an optimization.
   *
-  * Usage: java -cp ... graft.PlanDump [sfDir] [outFile]
+  * Usage: java -cp ... graft.PlanDump [sfDir] [outFile] [q1,q2,...]
   */
 object PlanDump {
 
@@ -219,24 +221,24 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val sf = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = args.lift(1).getOrElse("/root/repo/PLANS.md")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val why = headline.toMap
+    val names = args.lift(2).fold(headline.map(_._1))(
+      _.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+    val spark = GraftSession.builder(GraftSession.mainCpus).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
     val sb = new StringBuilder
     sb ++= "# PLANS — formatted physical plans of the headline queries\n\n"
     sb ++= s"Generated by `graft.PlanDump` on $sf. Evidence for the\n"
     sb ++= "100-TB design claims in COVERAGE.md: pushdown at the scan\n"
     sb ++= "(`PushedFilters`/`ReadSchema`), broadcast dimensions, TakeOrdered\n"
     sb ++= "top-k, bucketed no-exchange joins, whole-stage codegen spans.\n"
-    headline.foreach { case (name, why) =>
+    names.foreach { name =>
+      spark.sparkContext.setJobDescription(s"plandump: $name")
       val df = SparkEntry.queries(name)(spark, sf)
-      df.count() // let AQE finalize
+      df.count() // execute so AQE finalizes and metrics-backed nodes appear
       val plan = df.queryExecution
         .explainString(ExplainMode.fromString("formatted"))
-      sb ++= s"\n## $name — $why\n\n```\n$plan```\n"
+      sb ++= s"\n## $name${why.get(name).fold("")(" — " + _)}\n\n```\n$plan```\n"
     }
     java.nio.file.Files.write(java.nio.file.Paths.get(out),
       sb.toString.getBytes("UTF-8"))

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.graftbridge.ListenerBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 /** Shuffle-volume weak-scaling audit — the measured answer to "is there
@@ -26,18 +25,6 @@ import org.apache.spark.sql.SparkSession
   */
 object ScaleAudit {
 
-  private class ShuffleTally extends SparkListener {
-    val bytes = new java.util.concurrent.atomic.AtomicLong
-    val records = new java.util.concurrent.atomic.AtomicLong
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-      val m = t.taskMetrics
-      if (m != null) {
-        bytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        records.addAndGet(m.shuffleWriteMetrics.recordsWritten)
-      }
-    }
-  }
-
   /** Run `name` on `dir` and return (shuffleBytes, shuffleRecords).
     * Materializes through the `noop` sink, NOT `.count()`: under count
     * Catalyst prunes every column the count doesn't need — e.g.
@@ -45,13 +32,14 @@ object ScaleAudit {
     * the audit measured 46 bytes for a plan that really shuffles
     * ~218 KB. noop executes the declared plan in full, sink-less. */
   def measure(spark: SparkSession, name: String, dir: String): (Long, Long) = {
-    val tally = new ShuffleTally
+    val tally = new TaskTally
     spark.sparkContext.addSparkListener(tally)
     try {
       SparkEntry.queries(name)(spark, dir)
         .write.format("noop").mode("overwrite").save()
       ListenerBridge.waitUntilEmpty(spark.sparkContext, 30000)
-      (tally.bytes.get(), tally.records.get())
+      val s = tally.snap
+      (s.shuffleBytes, s.shuffleRecords)
     } finally spark.sparkContext.removeSparkListener(tally)
   }
 
@@ -292,13 +280,7 @@ object ScaleAudit {
 
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("/root/repo/SCALING.md")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.mainCpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     def ratio(a: Long, b: Long): String =
       if (a == 0) (if (b == 0) "0→0" else "0→>0")

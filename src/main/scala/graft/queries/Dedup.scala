@@ -209,7 +209,8 @@ object Dedup {
     * degenerate bucket fans out to C(C+1)/2 independent tasks that AQE
     * can schedule wide (pre-salting, parallelism was capped at the
     * band count whatever the cluster width — max/mean task time 2.5
-    * measured at local[4]; see graft.SkewBench + BASELINE.md round-7).
+    * measured at local[4]; BASELINE.md round-7 has the 10^4-replica
+    * run, DedupSpec's "2048 replicas of one doc" test the pin).
     *
     * The chunk count is ADAPTIVE per bucket: C = ⌈√(bsz/BucketCap)⌉
     * clamped to [4, 256], which pins per-task pair work at roughly

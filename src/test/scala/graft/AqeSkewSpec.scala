@@ -10,7 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * split. The repo handles skew two ways, each with its own evidence:
   *
   *  - EXPLICIT salting (`join_skew_salted`, the dedup BucketCap guard —
-  *    SkewBench) where the skew is structural and known ahead of time:
+  *    DedupSpec's 2048-replica test, BASELINE.md's 10^4-replica run)
+  *    where the skew is structural and known ahead of time:
   *    salting reshapes the PLAN, so it also fixes aggregations and
   *    collect_list-style state that AQE cannot touch;
   *  - BUILT-IN `spark.sql.adaptive.skewJoin` for plain shuffled joins

@@ -18,17 +18,9 @@ class CatalogSpec extends AnyFunSuite {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     val base = "/root/repo/target/hive"
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", s"$base/warehouse")
-      .config("javax.jdo.option.ConnectionURL",
-        s"jdbc:derby:;databaseName=$base/metastore_db;create=true")
-      .config("spark.sql.cbo.enabled", "true") // surface ANALYZE stats
-      .enableHiveSupport()
-      .getOrCreate()
+    val spark = HiveTables.session(appName = "graft-catalog-spec",
+      metastoreUris = None, master = "local[2]", localBase = base)
+    spark.conf.set("spark.sql.cbo.enabled", "true") // surface ANALYZE stats
     try {
       val sf = "/root/testdata/sf0.001"
       // partitioned parquet layout to hang the external table over
@@ -177,7 +169,6 @@ class CatalogSpec extends AnyFunSuite {
     // connection conf differs), which is what the sandbox can pin.
     val spark = HiveTables.session(appName = "graft-catalog-spec",
       metastoreUris = None, master = "local[2]", localBase = base)
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
     try {
       assert(spark.conf.get("spark.sql.catalogImplementation") == "hive")
       val sf = "/root/testdata/sf0.001"
@@ -314,7 +305,6 @@ class CatalogSpec extends AnyFunSuite {
     val spark = HiveTables.session(appName = "graft-annidx-spec",
       metastoreUris = None, master = "local[2]",
       localBase = "/root/repo/target/hive_annidx")
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
     try {
       import graft.queries.SimilarityFitted
       val sf = "/root/testdata/sf0.001"
@@ -381,7 +371,6 @@ class CatalogSpec extends AnyFunSuite {
     val spark = HiveTables.session(appName = "graft-write-spec",
       metastoreUris = None, master = "local[2]",
       localBase = "/root/repo/target/hive_write")
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
     try {
       val sf = "/root/testdata/sf0.001"
       spark.sql("CREATE DATABASE IF NOT EXISTS w_db")
@@ -444,7 +433,6 @@ class CatalogSpec extends AnyFunSuite {
     val spark = HiveTables.session(appName = "graft-facade-spec",
       metastoreUris = None, master = "local[2]",
       localBase = "target/hive_facade")
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
     try {
       val sf = new SparkSuite {}.sf // the shared fixture root
       val db = "f_db"
@@ -525,7 +513,6 @@ class CatalogSpec extends AnyFunSuite {
     val spark = HiveTables.session(appName = "graft-annserve-spec",
       metastoreUris = None, master = "local[2]",
       localBase = "/root/repo/target/hive_annserve")
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
     try {
       import graft.queries.SimilarityFitted
       val sf = "/root/testdata/sf0.001"
@@ -636,7 +623,6 @@ class CatalogSpec extends AnyFunSuite {
     val spark = HiveTables.session(appName = "graft-cobkt-spec",
       metastoreUris = None, master = "local[2]",
       localBase = "/root/repo/target/hive_cobkt")
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
     try {
       import graft.queries.SimilarityFitted
       val sf = "/root/testdata/sf0.001"
@@ -693,7 +679,6 @@ class CatalogSpec extends AnyFunSuite {
     val spark = HiveTables.session(appName = "graft-annwipe-spec",
       metastoreUris = None, master = "local[2]",
       localBase = "/root/repo/target/hive_annwipe")
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
     try {
       import java.nio.file.{Files, Paths, StandardCopyOption}
       import scala.jdk.CollectionConverters._

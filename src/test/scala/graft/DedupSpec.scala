@@ -316,8 +316,8 @@ class DedupSpec extends AnyFunSuite with SparkSuite {
     // branch, and candidate generation must complete with the exact
     // clique count — n*(n-1)/2 replica pairs plus the corpus's own
     // candidates — rather than concentrating an O(n²) expansion in one
-    // collect_list row. (The timed 10^4-replica run at sf0.1 lives in
-    // graft.SkewBench; BASELINE.md carries the number.)
+    // collect_list row. (The timed 10^4-replica run at sf0.1 is
+    // recorded in BASELINE.md.)
     val n = 2048
     val rep = spark.range(n).select(
       (col("id") + 1000000L).as("doc_id"),

@@ -53,11 +53,8 @@ class FaultRetrySpec extends AnyFunSuite {
     org.apache.spark.graftbridge.ListenerBridge.stopActiveContext()
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val spark = SparkSession.builder()
+    val spark = GraftSession.builder(4)
       .master("local[4, 3]") // 4 threads, maxFailures 3 -> retries live
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     val tally = new FailureTally
     spark.sparkContext.addSparkListener(tally)

@@ -11,13 +11,8 @@ TESTJARS=$(find "$CS" \( -path '*/org/scalatest/*' -o -path '*/org/scalactic/*' 
   \( -name "*_2.13-3.2.19.jar" -o -name "scalatest-compatible-3.2.19.jar" \) | sort -u | tr '\n' ':')
 XML=$(find "$CS" -path '*/org/scala-lang/modules/scala-xml_2.13/*' -name 'scala-xml_2.13-2.*.jar' | sort | head -1)
 CP="target/scala-2.13/test-classes:target/scala-2.13/classes:${TESTJARS}${XML}:/opt/spark/jars/*"
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-         java.nio java.util java.util.concurrent java.util.concurrent.atomic \
-         sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
+. tools/addopens.sh
 SUITE=$1; shift || true
 if [ -n "$1" ]; then ZARG=(-z "$1"); else ZARG=(); fi
-exec java $ADD_OPENS -Xmx8g -Dspark.ui.enabled=false \
+exec java $ADD_OPENS -Xmx8g \
   -cp "$CP" org.scalatest.tools.Runner -o -s "$SUITE" "${ZARG[@]}"

@@ -7,12 +7,5 @@ cd /root/repo
 SF=${1:-/root/testdata/sf0.01}
 OUT=${2:-/root/repo/target/verify}
 CP="target/scala-2.13/classes:/opt/spark/jars/*"
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-         java.nio java.util java.util.concurrent java.util.concurrent.atomic \
-         sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-exec java $ADD_OPENS -Xmx8g \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "$CP" graft.Verify "$SF" "$OUT"
+. tools/addopens.sh
+exec java $ADD_OPENS -Xmx8g -cp "$CP" graft.Verify "$SF" "$OUT"
