@@ -8,9 +8,12 @@ import org.apache.spark.sql.SparkSession
   *
   * For each audited query it runs the SAME plan at sf0.01 and sf0.1
   * (10× the rows) and tallies the bytes/records every task writes to
-  * shuffle. Unlike wall-clock, shuffle volume is deterministic — it
-  * does not care about box load, codegen warm-up, or run order — so the
-  * growth RATIO is a clean fingerprint of the operator's scale shape:
+  * shuffle. Unlike wall-clock, shuffle volume does not care about box
+  * load, codegen warm-up, or run order, so the growth RATIO is a
+  * fingerprint of the operator's scale shape. Record counts are the
+  * stable quantity; bytes also move with spill and heap (how much the
+  * map-side partials combined before spilling), so two runs over the
+  * same records can differ in bytes:
   *
   *   ~0×   the operator never shuffles (TakeOrdered top-k);
   *   ~1×   the shuffle is output-bounded (sketches: registers/bottom-k
@@ -289,8 +292,11 @@ object ScaleAudit {
     sb ++= "# SCALING — measured shuffle-volume growth, sf0.001 → sf0.01 → sf0.1\n\n"
     sb ++= "Generated by `graft.ScaleAudit`. Shuffle write bytes per query at\n"
     sb ++= "the three driver scale factors (two 10×-rows hops) and both growth\n"
-    sb ++= "ratios. Volume is deterministic (no load/warm-up noise), so the\n"
-    sb ++= "ratio pair is the operator's scale fingerprint — curvature, not a\n"
+    sb ++= "ratios. Volume ignores load and warm-up, but bytes also move with\n"
+    sb ++= "spill and heap (how far map-side partials combined before\n"
+    sb ++= "spilling), so two runs over the same records can differ in bytes;\n"
+    sb ++= "record counts are the stable quantity. The ratio pair is the\n"
+    sb ++= "operator's scale fingerprint — curvature, not a\n"
     sb ++= "single point: ~0/~1× on both hops = shuffle-free or output-bounded\n"
     sb ++= "(sketch partials saturate), ~10×/~10× = input-linear (the shuffled\n"
     sb ++= "payload is the data), NDV-linear tracks distinct-value growth\n"

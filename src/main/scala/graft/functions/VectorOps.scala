@@ -42,8 +42,8 @@ object VectorOps {
 
   /** Exact (order-independent) dot product of two float-array columns,
     * via the fused [[DecimalDot]] kernel (one pass, no intermediate
-    * array, bit-identical to [[dotDeclarative]] — VectorOpsSpec pins
-    * the equivalence). */
+    * array, bit-identical to [[dotDeclarative]] — DecimalDotSpec's
+    * "fast path ≡ declarative fold" test pins the equivalence). */
   def dot(a: Column, b: Column): Column = {
     import org.apache.spark.sql.graftbridge.ColumnBridge
     ColumnBridge.column(
@@ -77,4 +77,22 @@ object VectorOps {
     * zipped unnested elements `x`,`y`. Per-term type matches [[Term]]. */
   def sqlDot(x: String, y: String): String =
     s"CAST(SUM(CAST(CAST($x AS DOUBLE) * CAST($y AS DOUBLE) AS DECIMAL(26,12))) AS DOUBLE)"
+
+  /** List-indexed twin of [[dot]] for two DuckDB list expressions
+    * (same DECIMAL(26,12) per-term contract as [[sqlDot]], but usable
+    * per-row instead of via unnest + GROUP BY). The range is derived
+    * from len() with an equality guard so a dimension mismatch nulls
+    * the whole result — exactly what the Spark DecimalDot kernel does —
+    * instead of list_sum silently skipping the NULL out-of-range terms. */
+  def sqlDotList(a: String, b: String): String =
+    s"CAST(CASE WHEN len($a) = len($b) THEN " +
+      s"list_sum(list_transform(range(1, len($a) + 1), k -> " +
+      s"CAST(CAST(($a)[k] AS DOUBLE) * CAST(($b)[k] AS DOUBLE) " +
+      s"AS DECIMAL(26,12)))) END AS DOUBLE)"
+
+  /** DuckDB twin of [[cosine]] over two list expressions, built from
+    * [[sqlDotList]]. */
+  def sqlCosList(a: String, b: String): String =
+    s"${sqlDotList(a, b)} / (sqrt(${sqlDotList(a, a)}) * " +
+      s"sqrt(${sqlDotList(b, b)}))"
 }

@@ -1,6 +1,7 @@
 package graft.multimodal
 
 import graft.{Decl, Tables}
+import graft.functions.VectorOps
 import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.functions._
 
@@ -1500,9 +1501,6 @@ object Multimodal {
     // multimodal_embed's learned-PCA retrieval; the payload → features
     // → retrieval plumbing is real end to end in both.
     Decl("multimodal_embed_pixels", {
-      def dotL(a: String, b: String) =
-        s"CAST(list_sum(list_transform(range(1, 11), k -> " +
-          s"CAST(($a)[k] * ($b)[k] AS DECIMAL(26,12)))) AS DOUBLE)"
       val bins = (0 until 8).map(b =>
         s"    CAST(SUM(CASE WHEN gray // 32 = $b THEN 1 ELSE 0 END) " +
           "AS DOUBLE)").mkString(",\n")
@@ -1521,10 +1519,7 @@ object Multimodal {
          |      THEN 1 ELSE 0 END) AS DOUBLE)
          |  ] AS emb FROM px GROUP BY doc_id),
          |q AS (SELECT emb AS qe FROM f WHERE doc_id = 0)
-         |SELECT doc_id,
-         |  ${dotL("emb", "qe")} /
-         |    (sqrt(${dotL("emb", "emb")}) * sqrt(${dotL("qe", "qe")}))
-         |    AS sim
+         |SELECT doc_id, ${VectorOps.sqlCosList("emb", "qe")} AS sim
          |FROM f, q ORDER BY sim DESC, doc_id LIMIT 10""".stripMargin
     }) { (s, d) =>
       implicit val enc = Encoders.product[PixelFeatures]
@@ -1532,7 +1527,7 @@ object Multimodal {
       val emb = pngOf(ids)
         .mapPartitions(_.map(pixelEmbed))
         .toDF("doc_id", "emb")
-      import graft.functions.VectorOps.{dotDeclarative => dot}
+      import VectorOps.{dotDeclarative => dot}
       // query-side norm computed ONCE in the broadcast frame (the
       // sim_topk_projected discipline) — same double as recomputing
       // per row (deterministic kernel, identical inputs), one 10-dim

@@ -38,24 +38,76 @@ object Similarity {
   private val simCol: Column =
     cosineWithNorms(col("embedding"), col("qv"), col("n2"), col("qn2"))
 
-  /** Exact decimal repr of a float vector as a DuckDB double-list
-    * literal (BigDecimal(double) is the exact binary value, so the SQL
-    * literal widens to the same double as Spark's float→double cast). */
-  private def sqlVec(v: Seq[Float]): String =
-    v.map(f => new java.math.BigDecimal(f.toDouble).toPlainString)
-      .mkString("[", ", ", "]")
+  /** Exact cosine top-`k`, the rule every retrieval path ends in:
+    * select vec_id, the `carry` columns and `sim`, keep the best `k` by
+    * (sim DESC, vec_id) — one scan + TakeOrderedAndProject. */
+  private[queries] def cosineTopK(df: DataFrame, sim: Column, k: Int,
+      carry: String*): DataFrame =
+    df.select((col("vec_id") +: carry.map(col)) :+ sim.as("sim"): _*)
+      .orderBy(col("sim").desc, col("vec_id"))
+      .limit(k)
 
-  /** List-indexed twin of VectorOps.dot for two DuckDB list expressions
-    * (same DECIMAL(26,12) per-term contract as sqlDot, but usable
-    * per-row instead of via unnest + GROUP BY). The range is derived
-    * from len() with an equality guard so a dimension mismatch nulls
-    * the whole result — exactly what the Spark DecimalDot kernel does —
-    * instead of list_sum silently skipping the NULL out-of-range terms. */
-  private[queries] def sqlDotList(a: String, b: String): String =
-    s"CAST(CASE WHEN len($a) = len($b) THEN " +
-      s"list_sum(list_transform(range(1, len($a) + 1), k -> " +
-      s"CAST(CAST(($a)[k] AS DOUBLE) * CAST(($b)[k] AS DOUBLE) " +
-      s"AS DECIMAL(26,12)))) END AS DOUBLE)"
+  /** DuckDB twin of [[cosineTopK]] over candidate pairs `pairs`: the
+    * `cand` CTE (dot and squared norms of list expressions `a`, `b`)
+    * and the (sim DESC, vec_id) top-`k` over it. Margin-free. */
+  private[queries] def sqlCosTopK(a: String, b: String, pairs: String,
+      k: Int): String =
+    s"""cand AS (SELECT vec_id,
+       |    ${sqlDotList(a, b)} AS dot,
+       |    ${sqlDotList(a, a)} AS nx,
+       |    ${sqlDotList(b, b)} AS ny
+       |  FROM $pairs)
+       |SELECT vec_id, dot / (sqrt(nx) * sqrt(ny)) AS sim
+       |FROM cand ORDER BY sim DESC, vec_id LIMIT $k""".stripMargin
+
+  /** Two-stage ADC retrieval, shared by every PQ builder: the top
+    * `cand` rows by approximate score `approx` (ties → vec_id, one
+    * TakeOrdered), then the exact decimal-cosine re-rank to `k`. `enc`
+    * carries vec_id, embedding and the codes; `q` is the broadcast
+    * query frame with qv, qn2 and the distance tables. `gated` joins
+    * enc's IVF `cell` to q's probe `pcell` (IVFADC) instead of crossing
+    * the whole corpus with the query. */
+  private[queries] def adcTopK(enc: DataFrame, q: DataFrame,
+      gated: Boolean, approx: Column, cand: Int, k: Int): DataFrame = {
+    val pairs =
+      if (gated) enc.join(q, col("cell") === col("pcell"))
+      else enc.crossJoin(q)
+    cosineTopK(
+      pairs.select(col("vec_id"), col("embedding"), col("qv"), col("qn2"),
+          approx.as("approx"))
+        .orderBy(col("approx").desc, col("vec_id")).limit(cand),
+      cosineWithNorms(col("embedding"), col("qv"),
+        norm2(col("embedding")), col("qn2")),
+      k, "approx")
+  }
+
+  /** The ADC table lookups t_sub[c_sub + 1], one per subspace; `idx`
+    * adapts the code column's type to element_at's index. */
+  private[queries] def adcTerms(idx: Column => Column = identity): Seq[Column] =
+    (0 until PqSubspaces)
+      .map(sub => element_at(col(s"t$sub"), idx(col(s"c$sub") + 1)))
+
+  /** DuckDB twin of [[adcTopK]]: the candidate CTE `c` over codes `e`
+    * and the query side (`p` probe rows when gated, else `q`), whose
+    * `qv` select item is `qv`, then the exact re-rank. Margin-free. */
+  private[queries] def sqlAdcTopK(qv: String, approx: String,
+      gated: Boolean, cand: Int, k: Int): String = {
+    val pairs = if (gated) "e JOIN p ON e.cell = p.pcell" else "e, q"
+    s"""c AS (SELECT e.vec_id, e.embedding, $qv, $approx AS approx
+       |  FROM $pairs
+       |  ORDER BY approx DESC, e.vec_id LIMIT $cand)
+       |SELECT vec_id, approx, ${sqlCosList("embedding", "qv")} AS sim
+       |FROM c ORDER BY sim DESC, vec_id LIMIT $k""".stripMargin
+  }
+
+  /** DuckDB twin of [[adcTerms]]: the lookup chain off query alias `q`. */
+  private[queries] def sqlAdcTerms(q: String): String =
+    (0 until PqSubspaces)
+      .map(sub => s"($q.t$sub)[e.c$sub + 1]").mkString(" + ")
+
+  /** The distance-table columns t0..t7 a probe CTE carries along. */
+  private[queries] def sqlAdcTableCols: String =
+    (0 until PqSubspaces).map(sub => s"t$sub").mkString(", ")
 
   /** Plain-DOUBLE dot of a float-array column with a CONSTANT vector —
     * the [[graft.functions.ConstDot]] kernel: a left-associative IEEE
@@ -211,15 +263,21 @@ object Similarity {
     * assignment into an argmax of (dot + bias): argmin ‖x−c‖² ⇔
     * argmax (dot(x,c) − ‖c‖²/2). Computed once in exact doubles and
     * embedded in BOTH engines (VARCHAR hop on the SQL side). */
-  private val pqHalfNorms: Seq[Seq[Double]] =
-    pqCodebooks.map(_.map(c =>
-      c.map(f => f.toDouble * f.toDouble).sum / 2.0))
+  private val pqHalfNorms: Seq[Seq[Double]] = halfNormsOf(pqCodebooks)
 
   /** Dot of subspace `sub` of `emb` with a codebook entry — an 8-term
     * ConstDot chain over the sliced subvector (same IEEE-chain
     * determinism as the full-width dotConst). */
   private def pqSubDot(emb: Column, sub: Int, v: Seq[Float]): Column =
     dotConst(slice(emb, sub * PqSubDim + 1, PqSubDim), v)
+
+  /** Query-side ADC distance tables t0..t7 over `books`: per subspace,
+    * the query embedding's dot with each of the 16 entries, built once
+    * on the broadcast query row. */
+  private def pqTables(books: Seq[Seq[Seq[Float]]]): Seq[Column] =
+    (0 until PqSubspaces).map(sub =>
+      array((0 until PqCodes).map(i =>
+        pqSubDot(col("embedding"), sub, books(sub)(i))): _*).as(s"t$sub"))
 
   /** DuckDB twin of [[pqSubDot]]: identical 8-term textual chain over
     * 1-based sliced indices. The constant goes through a VARCHAR hop
@@ -262,6 +320,17 @@ object Similarity {
         s"CAST('${new java.math.BigDecimal(pqHalfNorms(sub)(i))
           .toPlainString}' AS DOUBLE)), " +
         s"c := $i)").mkString(", ")}])).c"
+
+  /** The c0..c7 select items of the fixed-codebook codes, one a line. */
+  private def sqlPqCodes: String = (0 until PqSubspaces)
+    .map(sub => s"${sqlPqCode("embedding", sub)} AS c$sub").mkString(",\n")
+
+  /** DuckDB twin of [[pqTables]]: select items `<name>0..7`, one
+    * hopped 16-entry dot list per subspace. */
+  private def sqlPqTables(books: Seq[Seq[Seq[Float]]], name: String): String =
+    (0 until PqSubspaces).map(sub => (0 until PqCodes)
+      .map(i => sqlPqSubDot("embedding", sub, books(sub)(i)))
+      .mkString("[", ", ", "]") + s" AS $name$sub").mkString(",\n")
 
   // RESIDUAL product quantization — what production IVFADC actually
   // encodes: not the raw vector but its residual x − c(cell) against
@@ -371,22 +440,10 @@ object Similarity {
     val q = broadcast(ne.filter(col("vec_id") === qid).select(
       col("embedding").as("qv") +: norm2(col("embedding")).as("qn2") +:
         explode(ivfTopCells(col("embedding"))).as("pcell") +:
-        (0 until PqSubspaces).map(s2 =>
-          array((0 until PqCodes).map(i =>
-            pqSubDot(col("embedding"), s2, books(s2)(i))): _*)
-            .as(s"t$s2")): _*)
+        pqTables(books): _*)
       .withColumn("qc", element_at(qcArr, col("pcell") + 1)))
-    val approx = (col("qc") +: (0 until PqSubspaces)
-      .map(s2 => element_at(col(s"t$s2"), col(s"c$s2") + 1)))
-      .reduce(_ + _)
-    enc.join(q, col("cell") === col("pcell"))
-      .select(col("vec_id"), col("embedding"), col("qv"), col("qn2"),
-        approx.as("approx"))
-      .orderBy(col("approx").desc, col("vec_id")).limit(cand)
-      .select(col("vec_id"), col("approx"),
-        cosineWithNorms(col("embedding"), col("qv"),
-          norm2(col("embedding")), col("qn2")).as("sim"))
-      .orderBy(col("sim").desc, col("vec_id")).limit(k)
+    adcTopK(enc, q, gated = true, (col("qc") +: adcTerms()).reduce(_ + _),
+      cand, k)
   }
 
   /** Two-stage PQ/ADC retrieval, parameterized for the recall spec:
@@ -401,32 +458,8 @@ object Similarity {
     * touches 4 bytes per row instead of 256. */
   private[graft] def pqTopK(
       s: SparkSession, d: String, qid: Long, cand: Int, k: Int,
-      books: Seq[Seq[Seq[Float]]] = pqCodebooks): DataFrame = {
-    val halfNorms = books.map(_.map(c =>
-      c.map(f => f.toDouble * f.toDouble).sum / 2.0))
-    val ne = Tables.embeddings(s, d).filter(col("embedding").isNotNull)
-    val enc = ne.select(
-      col("vec_id") +: col("embedding") +:
-        (0 until PqSubspaces).map(sub =>
-          pqCodeOf(col("embedding"), sub, books, halfNorms).as(s"c$sub")): _*)
-    val q = broadcast(ne.filter(col("vec_id") === qid).select(
-      col("embedding").as("qv") +: norm2(col("embedding")).as("qn2") +:
-        (0 until PqSubspaces).map(sub =>
-          array((0 until PqCodes).map(i =>
-            pqSubDot(col("embedding"), sub, books(sub)(i))): _*)
-            .as(s"t$sub")): _*))
-    val approx = (0 until PqSubspaces)
-      .map(sub => element_at(col(s"t$sub"), col(s"c$sub") + 1))
-      .reduce(_ + _)
-    enc.crossJoin(q)
-      .select(col("vec_id"), col("embedding"), col("qv"), col("qn2"),
-        approx.as("approx"))
-      .orderBy(col("approx").desc, col("vec_id")).limit(cand)
-      .select(col("vec_id"), col("approx"),
-        cosineWithNorms(col("embedding"), col("qv"),
-          norm2(col("embedding")), col("qn2")).as("sim"))
-      .orderBy(col("sim").desc, col("vec_id")).limit(k)
-  }
+      books: Seq[Seq[Seq[Float]]] = pqCodebooks): DataFrame =
+    pqAdcTopK(s, d, qid, cand, k, books, gated = false)
 
   /** IVF + PQ composition — the production billion-vector layout
     * (IVFADC, Jégou et al.): probe the query's [[IvfNProbe]] nearest
@@ -440,31 +473,26 @@ object Similarity {
     * oracled; zero shuffle — corpus side is map-only into two nested
     * TakeOrdereds, the query side is a broadcast 5-row probe frame. */
   private[graft] def ivfPqTopK(
-      s: SparkSession, d: String, qid: Long, cand: Int, k: Int): DataFrame = {
+      s: SparkSession, d: String, qid: Long, cand: Int, k: Int): DataFrame =
+    pqAdcTopK(s, d, qid, cand, k, pqCodebooks, gated = true)
+
+  /** The body of [[pqTopK]] and [[ivfPqTopK]], which differ only in
+    * the fixed IVF cell gate. */
+  private def pqAdcTopK(s: SparkSession, d: String, qid: Long, cand: Int,
+      k: Int, books: Seq[Seq[Seq[Float]]], gated: Boolean): DataFrame = {
+    val halfNorms = halfNormsOf(books)
     val ne = Tables.embeddings(s, d).filter(col("embedding").isNotNull)
-    val enc = ne.select(
-      col("vec_id") +: col("embedding") +:
-        ivfCellOf(col("embedding")).as("cell") +:
-        (0 until PqSubspaces).map(sub =>
-          pqCodeOf(col("embedding"), sub).as(s"c$sub")): _*)
+    val (cell, pcell) =
+      if (gated) (Seq(ivfCellOf(col("embedding")).as("cell")),
+        Seq(explode(ivfTopCells(col("embedding"))).as("pcell")))
+      else (Nil, Nil)
+    val enc = ne.select((col("vec_id") +: col("embedding") +: cell) ++
+      (0 until PqSubspaces).map(sub =>
+        pqCodeOf(col("embedding"), sub, books, halfNorms).as(s"c$sub")): _*)
     val q = broadcast(ne.filter(col("vec_id") === qid).select(
-      col("embedding").as("qv") +: norm2(col("embedding")).as("qn2") +:
-        explode(ivfTopCells(col("embedding"))).as("pcell") +:
-        (0 until PqSubspaces).map(sub =>
-          array((0 until PqCodes).map(i =>
-            pqSubDot(col("embedding"), sub, pqCodebooks(sub)(i))): _*)
-            .as(s"t$sub")): _*))
-    val approx = (0 until PqSubspaces)
-      .map(sub => element_at(col(s"t$sub"), col(s"c$sub") + 1))
-      .reduce(_ + _)
-    enc.join(q, col("cell") === col("pcell"))
-      .select(col("vec_id"), col("embedding"), col("qv"), col("qn2"),
-        approx.as("approx"))
-      .orderBy(col("approx").desc, col("vec_id")).limit(cand)
-      .select(col("vec_id"), col("approx"),
-        cosineWithNorms(col("embedding"), col("qv"),
-          norm2(col("embedding")), col("qn2")).as("sim"))
-      .orderBy(col("sim").desc, col("vec_id")).limit(k)
+      (col("embedding").as("qv") +: norm2(col("embedding")).as("qn2") +:
+        pcell) ++ pqTables(books): _*))
+    adcTopK(enc, q, gated, adcTerms().reduce(_ + _), cand, k)
   }
 
   /** Parameterized ANN pipelines, shared by the declared queries
@@ -485,10 +513,8 @@ object Similarity {
       .select(col("embedding").as("qv"), norm2(col("embedding")).as("qn2"),
         explode(array(lshProbeMasks.map(m =>
           col("bucket").bitwiseXOR(lit(m))): _*)).as("pbucket")))
-    withN2(e.join(q, col("bucket") === col("pbucket")))
-      .select(col("vec_id"), simCol.as("sim"))
-      .orderBy(col("sim").desc, col("vec_id"))
-      .limit(k)
+    cosineTopK(withN2(e.join(q, col("bucket") === col("pbucket"))),
+      simCol, k)
   }
 
   /** One distributed Lloyd update: assign every vector to its nearest
@@ -521,10 +547,7 @@ object Similarity {
       .select(col("embedding").as("qv"),
         graft.functions.VectorOps.norm2(col("embedding")).as("qn2"),
         explode(ivfTopCells(col("embedding"), cents, nProbe)).as("pcell")))
-    withN2(e.join(q, col("cell") === col("pcell")))
-      .select(col("vec_id"), simCol.as("sim"))
-      .orderBy(col("sim").desc, col("vec_id"))
-      .limit(k)
+    cosineTopK(withN2(e.join(q, col("cell") === col("pcell"))), simCol, k)
   }
 
   /** DuckDB twin of [[lshBucketOf]] (plane literals as exact decimals). */
@@ -639,11 +662,8 @@ object Similarity {
     * TakeOrderedAndProject) — the recall denominator. */
   private[graft] def bruteTopK(
       s: SparkSession, d: String, qid: Long, k: Int): DataFrame =
-    withN2(Tables.embeddings(s, d))
-      .crossJoin(queryVec(s, d, qid))
-      .select(col("vec_id"), simCol.as("sim"))
-      .orderBy(col("sim").desc, col("vec_id"))
-      .limit(k)
+    cosineTopK(withN2(Tables.embeddings(s, d)).crossJoin(queryVec(s, d, qid)),
+      simCol, k)
 
   /** sim_bitext_mine's side frames + union-fitted candidate gate,
     * extracted so ScaleSpec can pin the gate's output ROWS directly —
@@ -726,11 +746,7 @@ object Similarity {
       s"""${simsCte()}
          |SELECT vec_id, sim FROM cos
          |ORDER BY sim DESC, vec_id LIMIT 10""".stripMargin) { (s, d) =>
-      withN2(Tables.embeddings(s, d))
-        .crossJoin(queryVec(s, d, 0))
-        .select(col("vec_id"), simCol.as("sim"))
-        .orderBy(col("sim").desc, col("vec_id"))
-        .limit(10)
+      bruteTopK(s, d, 0, 10)
     },
 
     // C3b: RANGE similarity search — every vector above a cosine
@@ -878,13 +894,8 @@ object Similarity {
            |      FROM b WHERE vec_id = 0),
            |probes AS (SELECT qv, xor(qbucket, m) AS pbucket
            |           FROM q, UNNEST($masksSql) AS u(m)),
-           |cand AS (SELECT vec_id,
-           |    ${sqlDotList("embedding", "qv")} AS dot,
-           |    ${sqlDotList("embedding", "embedding")} AS nx,
-           |    ${sqlDotList("qv", "qv")} AS ny
-           |  FROM b JOIN probes ON b.bucket = probes.pbucket)
-           |SELECT vec_id, dot / (sqrt(nx) * sqrt(ny)) AS sim
-           |FROM cand ORDER BY sim DESC, vec_id LIMIT 10""".stripMargin) {
+           |${sqlCosTopK("embedding", "qv",
+                "b JOIN probes ON b.bucket = probes.pbucket", 10)}""".stripMargin) {
         (s, d) => annLshTopK(s, d, 0L, 10)
       }
     },
@@ -910,13 +921,8 @@ object Similarity {
          |          AS pcells
          |      FROM embeddings WHERE vec_id = 0),
          |probes AS (SELECT qv, UNNEST(pcells) AS pcell FROM q),
-         |cand AS (SELECT vec_id,
-         |    ${sqlDotList("embedding", "qv")} AS dot,
-         |    ${sqlDotList("embedding", "embedding")} AS nx,
-         |    ${sqlDotList("qv", "qv")} AS ny
-         |  FROM a JOIN probes ON a.cell = probes.pcell)
-         |SELECT vec_id, dot / (sqrt(nx) * sqrt(ny)) AS sim
-         |FROM cand ORDER BY sim DESC, vec_id LIMIT 10""".stripMargin) {
+         |${sqlCosTopK("embedding", "qv",
+              "a JOIN probes ON a.cell = probes.pcell", 10)}""".stripMargin) {
       (s, d) => annIvfTopK(s, d, 0L, 10)
     },
 
@@ -1053,18 +1059,15 @@ object Similarity {
       def pj(a: String) = rpPlanes
         .map(p => s"((${sqlDotConst(a, p)}) * 0.25)")
         .mkString("[", ", ", "]")
-      def cosL(a: String, b: String) =
-        s"${sqlDotList(a, b)} / (sqrt(${sqlDotList(a, a)}) * " +
-          s"sqrt(${sqlDotList(b, b)}))"
       s"""WITH q AS (SELECT embedding AS qv, ${pj("embedding")} AS pq
          |           FROM embeddings WHERE vec_id = 0),
          |p AS (SELECT e.vec_id, e.embedding, q.qv,
          |        ${pj("e.embedding")} AS pe, q.pq
          |      FROM embeddings e, q),
          |c AS (SELECT vec_id, embedding, qv,
-         |        ${cosL("pe", "pq")} AS sim_proj
+         |        ${sqlCosList("pe", "pq")} AS sim_proj
          |      FROM p ORDER BY sim_proj DESC, vec_id LIMIT 50)
-         |SELECT vec_id, sim_proj, ${cosL("embedding", "qv")} AS sim
+         |SELECT vec_id, sim_proj, ${sqlCosList("embedding", "qv")} AS sim
          |FROM c ORDER BY sim DESC, vec_id LIMIT 10""".stripMargin
     }) { (s, d) =>
       val projArr = (c: Column) =>
@@ -1083,11 +1086,8 @@ object Similarity {
             (dotDeclarative(pv, col("pq")) /
               (sqrt(dotDeclarative(pv, pv)) * col("pqn"))).as("sim_proj") })
         .orderBy(col("sim_proj").desc, col("vec_id")).limit(50)
-      stage1
-        .select(col("vec_id"), col("sim_proj"),
-          cosineWithNorms(col("embedding"), col("qv"),
-            norm2(col("embedding")), col("qn2")).as("sim"))
-        .orderBy(col("sim").desc, col("vec_id")).limit(10)
+      cosineTopK(stage1, cosineWithNorms(col("embedding"), col("qv"),
+        norm2(col("embedding")), col("qn2")), 10, "sim_proj")
     },
 
     // PQ ingest pass: every vector → its packed product-quantization
@@ -1130,33 +1130,16 @@ object Similarity {
     // IEEE chains, struct-max code ties, (approx, vec_id) candidate
     // order — so the oracle replays candidate selection AND re-ranking
     // exactly; SimilarityTextSpec pins the recall floor.
-    Decl("sim_topk_pq", {
-      def table(sub: Int) = (0 until PqCodes)
-        .map(i => sqlPqSubDot("embedding", sub, pqCodebooks(sub)(i)))
-        .mkString("[", ", ", "]")
-      def cosL(a: String, b: String) =
-        s"${sqlDotList(a, b)} / (sqrt(${sqlDotList(a, a)}) * " +
-          s"sqrt(${sqlDotList(b, b)}))"
-      val qTables = (0 until PqSubspaces)
-        .map(sub => s"${table(sub)} AS t$sub").mkString(",\n")
-      val codes = (0 until PqSubspaces)
-        .map(sub => s"${sqlPqCode("embedding", sub)} AS c$sub")
-        .mkString(",\n")
-      val approx = (0 until PqSubspaces)
-        .map(sub => s"(q.t$sub)[e.c$sub + 1]").mkString(" + ")
+    Decl("sim_topk_pq",
       s"""WITH ne AS (SELECT vec_id, embedding FROM embeddings
          |            WHERE embedding IS NOT NULL),
          |q AS (SELECT embedding AS qv,
-         |$qTables
+         |${sqlPqTables(pqCodebooks, "t")}
          |      FROM ne WHERE vec_id = 0),
          |e AS (SELECT vec_id, embedding,
-         |$codes
+         |$sqlPqCodes
          |      FROM ne),
-         |c AS (SELECT e.vec_id, e.embedding, q.qv, $approx AS approx
-         |      FROM e, q ORDER BY approx DESC, e.vec_id LIMIT 100)
-         |SELECT vec_id, approx, ${cosL("embedding", "qv")} AS sim
-         |FROM c ORDER BY sim DESC, vec_id LIMIT 10""".stripMargin
-    }) { (s, d) =>
+         |${sqlAdcTopK("q.qv", sqlAdcTerms("q"), gated = false, 100, 10)}""".stripMargin) { (s, d) =>
       pqTopK(s, d, 0, 100, 10)
     },
 
@@ -1173,39 +1156,20 @@ object Similarity {
     // SimilarityTextSpec pins recall@10 ≥ the PQ-alone floor and logs
     // the measured scan fraction; ScaleSpec pins the zero-shuffle
     // fingerprint (broadcast probe frame + two nested TakeOrdereds).
-    Decl("sim_ann_ivfpq", {
-      def table(sub: Int) = (0 until PqCodes)
-        .map(i => sqlPqSubDot("embedding", sub, pqCodebooks(sub)(i)))
-        .mkString("[", ", ", "]")
-      def cosL(a: String, b: String) =
-        s"${sqlDotList(a, b)} / (sqrt(${sqlDotList(a, a)}) * " +
-          s"sqrt(${sqlDotList(b, b)}))"
-      val qTables = (0 until PqSubspaces)
-        .map(sub => s"${table(sub)} AS t$sub").mkString(",\n")
-      val codes = (0 until PqSubspaces)
-        .map(sub => s"${sqlPqCode("embedding", sub)} AS c$sub")
-        .mkString(",\n")
-      val tcols = (0 until PqSubspaces).map(s => s"t$s").mkString(", ")
-      val approx = (0 until PqSubspaces)
-        .map(sub => s"(p.t$sub)[e.c$sub + 1]").mkString(" + ")
+    Decl("sim_ann_ivfpq",
       s"""WITH ne AS (SELECT vec_id, embedding FROM embeddings
          |            WHERE embedding IS NOT NULL),
          |e AS (SELECT vec_id, embedding, $ivfCellSql AS cell,
-         |$codes
+         |$sqlPqCodes
          |      FROM ne),
          |q AS (SELECT embedding AS qv,
          |        list_transform(list_reverse_sort(
          |          [$ivfScoredStructsSql])[1:$IvfNProbe], x -> x.c)
          |          AS pcells,
-         |$qTables
+         |${sqlPqTables(pqCodebooks, "t")}
          |      FROM ne WHERE vec_id = 0),
-         |p AS (SELECT qv, $tcols, UNNEST(pcells) AS pcell FROM q),
-         |c AS (SELECT e.vec_id, e.embedding, p.qv, $approx AS approx
-         |      FROM e JOIN p ON e.cell = p.pcell
-         |      ORDER BY approx DESC, e.vec_id LIMIT 100)
-         |SELECT vec_id, approx, ${cosL("embedding", "qv")} AS sim
-         |FROM c ORDER BY sim DESC, vec_id LIMIT 10""".stripMargin
-    }) { (s, d) =>
+         |p AS (SELECT qv, $sqlAdcTableCols, UNNEST(pcells) AS pcell FROM q),
+         |${sqlAdcTopK("p.qv", sqlAdcTerms("p"), gated = true, 100, 10)}""".stripMargin) { (s, d) =>
       ivfPqTopK(s, d, 0, 100, 10)
     },
 
@@ -1227,14 +1191,6 @@ object Similarity {
     // at the identical 8×4-bit budget — the claim the production
     // layout rests on, witnessed with both corpora.
     Decl("sim_ann_ivfpq_residual", {
-      def dlist(s2: Int) = (0 until PqCodes)
-        .map(i => sqlPqSubDot("embedding", s2, pqResCodebooks(s2)(i)))
-        .mkString("[", ", ", "]")
-      def cosL(a: String, b: String) =
-        s"${sqlDotList(a, b)} / (sqrt(${sqlDotList(a, a)}) * " +
-          s"sqrt(${sqlDotList(b, b)}))"
-      val dcols = (0 until PqSubspaces)
-        .map(s2 => s"${dlist(s2)} AS d$s2").mkString(",\n")
       val codes = (0 until PqSubspaces).map(s2 =>
         s"(list_max(list_transform(range(0, $PqCodes), i -> " +
           s"struct_pack(s := d$s2[i + 1] - " +
@@ -1243,15 +1199,11 @@ object Similarity {
       val qcArr = ivfCentroids
         .map(c => s"(${sqlDotConstHop("embedding", c)})")
         .mkString("[", ", ", "]")
-      val qTables = (0 until PqSubspaces)
-        .map(s2 => s"${dlist(s2)} AS t$s2").mkString(",\n")
-      val tcols = (0 until PqSubspaces).map(s => s"t$s").mkString(", ")
-      val approx = "p.qc_arr[p.pcell + 1] + " + (0 until PqSubspaces)
-        .map(s2 => s"(p.t$s2)[e.c$s2 + 1]").mkString(" + ")
+      val approx = "p.qc_arr[p.pcell + 1] + " + sqlAdcTerms("p")
       s"""WITH ne AS (SELECT vec_id, embedding FROM embeddings
          |            WHERE embedding IS NOT NULL),
          |e0 AS (SELECT vec_id, embedding, $ivfCellSql AS cell,
-         |$dcols
+         |${sqlPqTables(pqResCodebooks, "d")}
          |       FROM ne),
          |e AS (SELECT vec_id, embedding, cell,
          |$codes
@@ -1261,14 +1213,10 @@ object Similarity {
          |          [$ivfScoredStructsSql])[1:$IvfNProbe], x -> x.c)
          |          AS pcells,
          |        $qcArr AS qc_arr,
-         |$qTables
+         |${sqlPqTables(pqResCodebooks, "t")}
          |      FROM ne WHERE vec_id = 0),
-         |p AS (SELECT qv, qc_arr, $tcols, UNNEST(pcells) AS pcell FROM q),
-         |c AS (SELECT e.vec_id, e.embedding, p.qv, $approx AS approx
-         |      FROM e JOIN p ON e.cell = p.pcell
-         |      ORDER BY approx DESC, e.vec_id LIMIT 100)
-         |SELECT vec_id, approx, ${cosL("embedding", "qv")} AS sim
-         |FROM c ORDER BY sim DESC, vec_id LIMIT 10""".stripMargin
+         |p AS (SELECT qv, qc_arr, $sqlAdcTableCols, UNNEST(pcells) AS pcell FROM q),
+         |${sqlAdcTopK("p.qv", approx, gated = true, 100, 10)}""".stripMargin
     }) { (s, d) =>
       ivfPqResidualTopK(s, d, 0, 100, 10)
     },
@@ -1285,13 +1233,10 @@ object Similarity {
     // retrieval path (SimilarityTextSpec) feeds these means back into
     // pqTopK and pins recall strictly above the fixed-codebook floor.
     Decl("pq_fit_codebooks", {
-      val codes = (0 until PqSubspaces)
-        .map(sub => s"${sqlPqCode("embedding", sub)} AS c$sub")
-        .mkString(",\n")
       val codeCase = (0 until PqSubspaces - 1)
         .map(sub => s"WHEN $sub THEN c$sub").mkString(" ")
       s"""WITH a AS (SELECT embedding,
-         |$codes
+         |$sqlPqCodes
          |      FROM embeddings WHERE embedding IS NOT NULL),
          |s AS (SELECT CAST(t.sub AS INTEGER) AS sub,
          |        CAST(CASE t.sub $codeCase
@@ -1417,17 +1362,13 @@ object Similarity {
         s"${SimilarityFitted.pcellsSqlOf("embedding")} AS pcells " +
         "FROM a WHERE vec_id % 20 = 0)",
       "pos AS (SELECT aid, a.vec_id AS pos_id, " +
-        s"${sqlDotList("av", "a.embedding")} / " +
-        s"(sqrt(${sqlDotList("av", "av")}) * " +
-        s"sqrt(${sqlDotList("a.embedding", "a.embedding")})) AS pos_sim " +
+        s"${sqlCosList("av", "a.embedding")} AS pos_sim " +
         "FROM anc JOIN a ON a.label = anc.albl AND a.vec_id <> anc.aid " +
         "QUALIFY row_number() OVER (PARTITION BY aid " +
         "ORDER BY pos_sim DESC, a.vec_id) = 1)",
       "pr AS (SELECT aid, albl, av, UNNEST(pcells) AS pc FROM anc)",
       "neg AS (SELECT aid, a.vec_id AS neg_id, " +
-        s"${sqlDotList("av", "a.embedding")} / " +
-        s"(sqrt(${sqlDotList("av", "av")}) * " +
-        s"sqrt(${sqlDotList("a.embedding", "a.embedding")})) AS neg_sim " +
+        s"${sqlCosList("av", "a.embedding")} AS neg_sim " +
         "FROM pr JOIN a ON a.cell = pr.pc AND a.label <> pr.albl " +
         "QUALIFY row_number() OVER (PARTITION BY aid " +
         "ORDER BY neg_sim DESC, a.vec_id) = 1)"
@@ -1529,10 +1470,7 @@ object Similarity {
     // DuckDB twin replays the Lloyd fit CTE-by-CTE, so the mined pair
     // set replays exactly.
     Decl("sim_bitext_mine", {
-      val cosXY =
-        s"${sqlDotList("a.embedding", "b.embedding")} / " +
-          s"(sqrt(${sqlDotList("a.embedding", "a.embedding")}) * " +
-          s"sqrt(${sqlDotList("b.embedding", "b.embedding")}))"
+      val cosXY = sqlCosList("a.embedding", "b.embedding")
       Seq(
         s"WITH ${SimilarityFitted.fittedCtes(" AND label IN (0, 1)")}",
         "ep AS (SELECT em.vec_id, em.label, em.embedding, " +

@@ -1,7 +1,8 @@
 package graft.queries
 
 import graft.{Catalog, Decl, HiveTables, Tables}
-import graft.functions.VectorOps.{cosineWithNorms, dot, norm2}
+import graft.functions.VectorOps.{cosineWithNorms, dot, norm2, sqlCosList,
+  sqlDotList}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, FloatType, IntegerType, LongType}
@@ -223,12 +224,8 @@ object SimilarityFitted {
       .select(col("embedding").as("qv"),
         norm2(col("embedding")).as("qn2"),
         explode(probeCellsArr(col("embedding"), col("cs"))).as("pcell")))
-    e.join(q, col("cell") === col("pcell"))
-      .select(col("vec_id"),
-        cosineWithNorms(col("embedding"), col("qv"),
-          col("n2"), col("qn2")).as("sim"))
-      .orderBy(col("sim").desc, col("vec_id"))
-      .limit(k)
+    Similarity.cosineTopK(e.join(q, col("cell") === col("pcell")),
+      cosineWithNorms(col("embedding"), col("qv"), col("n2"), col("qn2")), k)
   }
 
   /** Fitted centroid array over the full non-null corpus. */
@@ -902,16 +899,15 @@ object SimilarityFitted {
     // Serving therefore plans with autoBucketedScan off — the
     // documented Spark recipe for pruning-reliant reads. Because
     // planning happens at the caller's action, after this function
-    // returns, the setting cannot be snapshot/restored here; r16
-    // scopes it to a dedicated SERVING SESSION (same SparkContext and
-    // shared Hive catalog, own SessionState) so the caller's session
-    // conf is never mutated — CatalogSpec pins that a bucketed_join
-    // planned after a serve in the same root session still consumes
-    // bucketed scans.
-    val sv = servingSession(s)
-    val base = HiveTables.table(sv, database, s"${prefix}_base")
+    // returns, the setting cannot be snapshot/restored here; the
+    // served frame is re-bound to a clone of the caller's session
+    // that carries it (SessionBridge.withConf), so the caller's
+    // session conf is never mutated — CatalogSpec pins that a
+    // bucketed_join planned after a serve in the same root session
+    // still consumes bucketed scans.
+    val base = HiveTables.table(s, database, s"${prefix}_base")
     val cents = broadcast(
-      HiveTables.table(sv, database, s"${prefix}_cents"))
+      HiveTables.table(s, database, s"${prefix}_cents"))
     val pcells: Seq[Long] =
       base.filter(col("vec_id") === qid).crossJoin(cents)
         .select(probeCellsArr(col("embedding"), col("cs")).as("pcells"))
@@ -924,42 +920,12 @@ object SimilarityFitted {
     val q = broadcast(base.filter(col("vec_id") === qid).crossJoin(cents)
       .select(col("embedding").as("qv"), col("n2").as("qn2"),
         explode(probeCellsArr(col("embedding"), col("cs"))).as("pcell")))
-    base.filter(gate)
-      .join(q, col("cell") === col("pcell"))
-      .select(col("vec_id"),
-        cosineWithNorms(col("embedding"), col("qv"),
-          col("n2"), col("qn2")).as("sim"))
-      .orderBy(col("sim").desc, col("vec_id"))
-      .limit(k)
-  }
-
-  /** Per-root-session SERVING session memo: catalog serving plans
-    * under `autoBucketedScan=false` (see [[annTopKFromCatalog]]), and
-    * that must not leak into the caller's session — Spark's
-    * session-conf is the only way to reach the planner at the
-    * consumer's action time, so the serve gets its OWN session
-    * (shared SparkContext + Hive external catalog, private
-    * SessionState/conf). Weak keys: entries die with their root
-    * session, so stopped-context frames never accumulate (the
-    * Catalog.viewsDir discipline). Runtime conf is re-synced from the
-    * root on every call (modifiable keys only) so axis sweeps that
-    * flip session conf mid-process reach the serving planner too. */
-  private val serveSessions = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession, SparkSession]())
-  private[graft] def servingSession(s: SparkSession): SparkSession = {
-    val sv = serveSessions.synchronized {
-      Option(serveSessions.get(s)).getOrElse {
-        val ns = s.newSession()
-        serveSessions.put(s, ns)
-        ns
-      }
-    }
-    s.conf.getAll.foreach { case (kk, vv) =>
-      scala.util.Try(sv.conf.set(kk, vv)) // static keys refuse: keep
-    }
-    sv.conf.set(
-      "spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-    sv
+    org.apache.spark.sql.graftbridge.SessionBridge.withConf(
+      Similarity.cosineTopK(
+        base.filter(gate).join(q, col("cell") === col("pcell")),
+        cosineWithNorms(col("embedding"), col("qv"), col("n2"), col("qn2")),
+        k),
+      Map("spark.sql.sources.bucketing.autoBucketedScan.enabled" -> "false"))
   }
 
   /** Ensure the fitted index is persisted as managed catalog tables
@@ -1135,9 +1101,6 @@ object SimilarityFitted {
   // DuckDB twin: the same fit + assignment, CTE by CTE
   // ---------------------------------------------------------------
 
-  private def dotSql(a: String, b: String): String =
-    Similarity.sqlDotList(a, b)
-
   /** CTE block (no leading WITH) deriving the fitted centroid array:
     * nef (corpus) → sarr (stride seeds) → a0f (seed assignment) →
     * fitm (exact decimal means) → fcent (REAL-quantized centroids) →
@@ -1151,7 +1114,7 @@ object SimilarityFitted {
       s"ORDER BY vec_id) AS cs FROM nef WHERE vec_id % $IvfOccupancy = 0)",
     s"a0f AS (SELECT vec_id, embedding, " +
       s"-((list_max(list_transform((SELECT cs FROM sarr), cc -> " +
-      s"struct_pack(s := ${dotSql("embedding", "cc.cvec")}, " +
+      s"struct_pack(s := ${sqlDotList("embedding", "cc.cvec")}, " +
       s"c := -cc.cid)))).c) AS cell0 FROM nef)",
     "fitm AS (SELECT cell0, k - 1 AS dim, " +
       "CAST(CAST(SUM(CAST(CAST(CAST(embedding[k] AS DOUBLE) AS VARCHAR) " +
@@ -1166,7 +1129,7 @@ object SimilarityFitted {
   /** Fitted-cell assignment of `embExpr` (twin of [[cellOfArr]]). */
   private[queries] def cellSqlOf(embExpr: String): String =
     s"-((list_max(list_transform((SELECT cs FROM farr), cc -> " +
-      s"struct_pack(s := ${dotSql(embExpr, "cc.cvec")}, " +
+      s"struct_pack(s := ${sqlDotList(embExpr, "cc.cvec")}, " +
       s"c := -cc.cid)))).c)"
 
   /** Fitted probe list of `embExpr` (twin of [[probeCellsArr]] at the
@@ -1174,7 +1137,7 @@ object SimilarityFitted {
   private[queries] def pcellsSqlOf(embExpr: String,
       k: Int = FittedNProbe): String =
     s"list_transform(list_sort(list_transform((SELECT cs FROM farr), " +
-      s"cc -> struct_pack(s := -(${dotSql(embExpr, "cc.cvec")}), " +
+      s"cc -> struct_pack(s := -(${sqlDotList(embExpr, "cc.cvec")}), " +
       s"c := cc.cid)))[1:$k], x -> x.c)"
 
   /** Shared candidate/verify CTE tail: af (corpus cells) + pe (probe
@@ -1189,9 +1152,9 @@ object SimilarityFitted {
       "GREATEST(pe.vec_id, af.vec_id) AS v2 FROM pe JOIN af " +
       "ON af.cell = pe.pcell AND af.vec_id <> pe.vec_id)",
     "sims AS (SELECT c.v1, c.v2, " +
-      s"${dotSql("e1.embedding", "e2.embedding")} AS dot, " +
-      s"${dotSql("e1.embedding", "e1.embedding")} AS nx, " +
-      s"${dotSql("e2.embedding", "e2.embedding")} AS ny " +
+      s"${sqlDotList("e1.embedding", "e2.embedding")} AS dot, " +
+      s"${sqlDotList("e1.embedding", "e1.embedding")} AS nx, " +
+      s"${sqlDotList("e2.embedding", "e2.embedding")} AS ny " +
       "FROM cand c JOIN embeddings e1 ON e1.vec_id = c.v1 " +
       "JOIN embeddings e2 ON e2.vec_id = c.v2)"
   ).mkString(",\n")
@@ -1285,39 +1248,8 @@ object SimilarityFitted {
     * recall spec (the pqTopK shape: broadcast query tables, top-`cand`
     * by approximate dot, exact decimal re-rank to `k`). */
   private[graft] def fittedPqTopK(s: SparkSession, d: String,
-      qid: Long, cand: Int, k: Int): DataFrame = {
-    import Similarity.{PqSubDim, PqSubspaces}
-    def aug(embCol: Column, sub: Int, marker: Float): Column =
-      concat(slice(embCol, sub * PqSubDim + 1, PqSubDim),
-        array(lit(marker)))
-    val ne = nonNull(Tables.embeddings(s, d))
-    val bks = broadcast(fittedPqBooks(s, d))
-    val enc = ne.crossJoin(bks).select(
-      col("vec_id") +: col("embedding") +:
-        (0 until PqSubspaces).map(sub =>
-          element_at(graft.functions.IvfTopCells(
-            aug(col("embedding"), sub, 1.0f),
-            element_at(col("bs"), sub + 1), 1), 1).as(s"c$sub")): _*)
-    val q = broadcast(ne.filter(col("vec_id") === qid).crossJoin(bks)
-      .select(
-        col("embedding").as("qv") +: norm2(col("embedding")).as("qn2") +:
-          (0 until PqSubspaces).map(sub =>
-            transform(element_at(col("bs"), sub + 1),
-              b => dot(aug(col("embedding"), sub, 0.0f),
-                b.getField("cvec"))).as(s"t$sub")): _*))
-    val approx = (0 until PqSubspaces)
-      .map(sub => element_at(col(s"t$sub"),
-        (col(s"c$sub") + 1).cast(IntegerType)))
-      .reduce(_ + _)
-    enc.crossJoin(q)
-      .select(col("vec_id"), col("embedding"), col("qv"), col("qn2"),
-        approx.as("approx"))
-      .orderBy(col("approx").desc, col("vec_id")).limit(cand)
-      .select(col("vec_id"), col("approx"),
-        cosineWithNorms(col("embedding"), col("qv"),
-          norm2(col("embedding")), col("qn2")).as("sim"))
-      .orderBy(col("sim").desc, col("vec_id")).limit(k)
-  }
+      qid: Long, cand: Int, k: Int): DataFrame =
+    fittedAdcTopK(s, d, qid, cand, k, gated = false)
 
   /** Fully-fitted IVFADC retrieval — the production composition with
     * BOTH halves learned in-engine: the occupancy-scaled fitted cells
@@ -1325,42 +1257,39 @@ object SimilarityFitted {
     * and the refit PQ books supply the code assignment + query
     * distance tables. Parameterized for the recall spec. */
   private[graft] def fittedIvfPqTopK(s: SparkSession, d: String,
-      qid: Long, cand: Int, k: Int): DataFrame = {
+      qid: Long, cand: Int, k: Int): DataFrame =
+    fittedAdcTopK(s, d, qid, cand, k, gated = true)
+
+  /** The body of [[fittedPqTopK]] and [[fittedIvfPqTopK]], which differ
+    * only in the fitted IVF cell gate. */
+  private def fittedAdcTopK(s: SparkSession, d: String, qid: Long,
+      cand: Int, k: Int, gated: Boolean): DataFrame = {
     import Similarity.{PqSubDim, PqSubspaces}
     def aug(embCol: Column, sub: Int, marker: Float): Column =
       concat(slice(embCol, sub * PqSubDim + 1, PqSubDim),
         array(lit(marker)))
     val ne = nonNull(Tables.embeddings(s, d))
-    val fcs = broadcast(fittedCsFull(s, d))
+    val fcs = if (gated) Some(broadcast(fittedCsFull(s, d))) else None
     val bks = broadcast(fittedPqBooks(s, d))
-    val enc = ne.crossJoin(fcs).crossJoin(bks).select(
-      col("vec_id") +: col("embedding") +:
-        cellOfArr(col("embedding"), col("cs")).as("cell") +:
+    def indexed(df: DataFrame) = fcs.fold(df)(df.crossJoin(_)).crossJoin(bks)
+    val (cell, pcell) =
+      if (gated) (Seq(cellOfArr(col("embedding"), col("cs")).as("cell")),
+        Seq(explode(probeCellsArr(col("embedding"), col("cs"))).as("pcell")))
+      else (Nil, Nil)
+    val enc = indexed(ne).select((col("vec_id") +: col("embedding") +: cell) ++
+      (0 until PqSubspaces).map(sub =>
+        element_at(graft.functions.IvfTopCells(
+          aug(col("embedding"), sub, 1.0f),
+          element_at(col("bs"), sub + 1), 1), 1).as(s"c$sub")): _*)
+    val q = broadcast(indexed(ne.filter(col("vec_id") === qid)).select(
+      (col("embedding").as("qv") +: norm2(col("embedding")).as("qn2") +:
+        pcell) ++
         (0 until PqSubspaces).map(sub =>
-          element_at(graft.functions.IvfTopCells(
-            aug(col("embedding"), sub, 1.0f),
-            element_at(col("bs"), sub + 1), 1), 1).as(s"c$sub")): _*)
-    val q = broadcast(ne.filter(col("vec_id") === qid)
-      .crossJoin(fcs).crossJoin(bks)
-      .select(
-        col("embedding").as("qv") +: norm2(col("embedding")).as("qn2") +:
-          explode(probeCellsArr(col("embedding"), col("cs"))).as("pcell") +:
-          (0 until PqSubspaces).map(sub =>
-            transform(element_at(col("bs"), sub + 1),
-              b => dot(aug(col("embedding"), sub, 0.0f),
-                b.getField("cvec"))).as(s"t$sub")): _*))
-    val approx = (0 until PqSubspaces)
-      .map(sub => element_at(col(s"t$sub"),
-        (col(s"c$sub") + 1).cast(IntegerType)))
-      .reduce(_ + _)
-    enc.join(q, col("cell") === col("pcell"))
-      .select(col("vec_id"), col("embedding"), col("qv"), col("qn2"),
-        approx.as("approx"))
-      .orderBy(col("approx").desc, col("vec_id")).limit(cand)
-      .select(col("vec_id"), col("approx"),
-        cosineWithNorms(col("embedding"), col("qv"),
-          norm2(col("embedding")), col("qn2")).as("sim"))
-      .orderBy(col("sim").desc, col("vec_id")).limit(k)
+          transform(element_at(col("bs"), sub + 1),
+            b => dot(aug(col("embedding"), sub, 0.0f),
+              b.getField("cvec"))).as(s"t$sub")): _*))
+    Similarity.adcTopK(enc, q, gated,
+      Similarity.adcTerms(_.cast(IntegerType)).reduce(_ + _), cand, k)
   }
 
   /** DuckDB CTE block for the refit books: pqa/pqs/pfit (the
@@ -1384,24 +1313,15 @@ object SimilarityFitted {
   private def pqECodesSql: String =
     (0 until Similarity.PqSubspaces).map(sub =>
       s"-((list_max(list_transform(${pqBlSql(sub)}, cc -> " +
-        s"struct_pack(s := ${dotSql(pqAugSql("embedding", sub, "1.0"),
+        s"struct_pack(s := ${sqlDotList(pqAugSql("embedding", sub, "1.0"),
           "cc.cvec")}, c := -cc.cid)))).c) AS c$sub").mkString(",\n")
 
   /** Per-subspace query ADC tables t0..t7 (pure dots, marker 0.0). */
   private def pqQTablesSql: String =
     (0 until Similarity.PqSubspaces).map(sub =>
       s"list_transform(${pqBlSql(sub)}, cc -> " +
-        s"${dotSql(pqAugSql("embedding", sub, "0.0"), "cc.cvec")}) " +
+        s"${sqlDotList(pqAugSql("embedding", sub, "0.0"), "cc.cvec")}) " +
         s"AS t$sub").mkString(",\n")
-
-  /** ADC approximate dot: left-associative chain of the 8 lookups. */
-  private def pqApproxSql(qAlias: String): String =
-    (0 until Similarity.PqSubspaces)
-      .map(sub => s"($qAlias.t$sub)[e.c$sub + 1]").mkString(" + ")
-
-  private def cosLSql(a: String, b: String): String =
-    s"${dotSql(a, b)} / (sqrt(${dotSql(a, a)}) * " +
-      s"sqrt(${dotSql(b, b)}))"
 
   private val nefCte: String =
     "nef AS (SELECT vec_id, embedding FROM embeddings " +
@@ -1445,7 +1365,7 @@ object SimilarityFitted {
         "AS bvec FROM fixedb fb LEFT JOIN fvs " +
         "ON fvs.sub = fb.sub AND fvs.code = fb.code)",
       "bk1 AS (SELECT sub, code, list_append(bvec, " +
-        s"CAST(-(${dotSql("bvec", "bvec")} / 2) AS REAL)) AS cvec " +
+        s"CAST(-(${sqlDotList("bvec", "bvec")} / 2) AS REAL)) AS cvec " +
         "FROM bk0)",
       "barr AS (SELECT sub, list(struct_pack(cid := " +
         "CAST(code AS BIGINT), cvec := cvec) ORDER BY code) AS bl " +
@@ -1470,13 +1390,8 @@ af AS (SELECT vec_id, embedding, ${cellSqlOf("embedding")} AS cell
 qf AS (SELECT embedding AS qv, ${pcellsSqlOf("embedding")} AS pcells
        FROM nef WHERE vec_id = 0),
 probes AS (SELECT qv, UNNEST(pcells) AS pcell FROM qf),
-cand AS (SELECT vec_id,
-    ${dotSql("af.embedding", "probes.qv")} AS dot,
-    ${dotSql("af.embedding", "af.embedding")} AS nx,
-    ${dotSql("probes.qv", "probes.qv")} AS ny
-  FROM af JOIN probes ON af.cell = probes.pcell)
-SELECT vec_id, dot / (sqrt(nx) * sqrt(ny)) AS sim
-FROM cand ORDER BY sim DESC, vec_id LIMIT 10"""
+${Similarity.sqlCosTopK("af.embedding", "probes.qv",
+  "af JOIN probes ON af.cell = probes.pcell", 10)}"""
 
   private[graft] val decls: Seq[Decl] = Seq(
 
@@ -1564,9 +1479,9 @@ pe AS (SELECT vec_id, UNNEST(pcells) AS pcell FROM pf),
 cand AS (SELECT DISTINCT pe.vec_id AS vn, af.vec_id AS vo
          FROM pe JOIN af ON af.cell = pe.pcell),
 sims AS (SELECT c.vn, c.vo,
-    ${dotSql("e1.embedding", "e2.embedding")} AS dot,
-    ${dotSql("e1.embedding", "e1.embedding")} AS nx,
-    ${dotSql("e2.embedding", "e2.embedding")} AS ny
+    ${sqlDotList("e1.embedding", "e2.embedding")} AS dot,
+    ${sqlDotList("e1.embedding", "e1.embedding")} AS nx,
+    ${sqlDotList("e2.embedding", "e2.embedding")} AS ny
   FROM cand c
   JOIN embeddings e1 ON e1.vec_id = c.vn
   JOIN embeddings e2 ON e2.vec_id = c.vo),
@@ -1643,7 +1558,7 @@ b AS (SELECT vec_id, embedding, ${cellSqlOf("embedding")} AS cell
       FROM nef),
 a AS (SELECT vec_id, embedding, cell FROM b WHERE vec_id % 10 = 3),
 j AS (SELECT a.vec_id AS qid, b.vec_id AS cid,
-    ${cosLSql("b.embedding", "a.embedding")} AS sim
+    ${sqlCosList("b.embedding", "a.embedding")} AS sim
   FROM a JOIN b ON b.cell = a.cell AND b.vec_id <> a.vec_id)
 SELECT qid, COUNT(*) AS n_cand, MAX(sim) AS best_sim
 FROM j GROUP BY qid ORDER BY qid""") { (s, d) =>
@@ -1675,9 +1590,9 @@ probe AS (SELECT vec_id AS qid, embedding AS qv,
   FROM nef WHERE vec_id % 20 = 0 AND vec_id < 500),
 pr AS (SELECT qid, qv, UNNEST(pcells) AS pcell FROM probe),
 cand AS (SELECT qid, b.vec_id,
-    ${dotSql("b.embedding", "pr.qv")} AS dot,
-    ${dotSql("b.embedding", "b.embedding")} AS nx,
-    ${dotSql("pr.qv", "pr.qv")} AS ny
+    ${sqlDotList("b.embedding", "pr.qv")} AS dot,
+    ${sqlDotList("b.embedding", "b.embedding")} AS nx,
+    ${sqlDotList("pr.qv", "pr.qv")} AS ny
   FROM b JOIN pr ON b.cell = pr.pcell WHERE b.vec_id <> pr.qid),
 ranked AS (SELECT qid, vec_id, dot / (sqrt(nx) * sqrt(ny)) AS sim,
     row_number() OVER (PARTITION BY qid
@@ -1718,8 +1633,7 @@ FROM ranked WHERE rn <= 5 ORDER BY qid, rnk""") { (s, d) =>
     // exact-cosine re-rank replay bit-for-bit in DuckDB.
     // SimilarityTextSpec re-measures recall@10 over 20 probes on this
     // declared path (the refit lifts the fixed-book 0.56 floor).
-    Decl("sim_topk_pq_fitted", {
-      val approx = pqApproxSql("q")
+    Decl("sim_topk_pq_fitted",
       s"""WITH ${fittedPqCtes},
 e AS (SELECT vec_id, embedding,
 $pqECodesSql
@@ -1727,11 +1641,8 @@ $pqECodesSql
 q AS (SELECT embedding,
 $pqQTablesSql
   FROM nef WHERE vec_id = 0),
-c AS (SELECT e.vec_id, e.embedding, q.embedding AS qv, $approx AS approx
-  FROM e, q ORDER BY approx DESC, e.vec_id LIMIT 100)
-SELECT vec_id, approx, ${cosLSql("embedding", "qv")} AS sim
-FROM c ORDER BY sim DESC, vec_id LIMIT 10"""
-    }) { (s, d) =>
+${Similarity.sqlAdcTopK("q.embedding AS qv", Similarity.sqlAdcTerms("q"),
+  gated = false, 100, 10)}""") { (s, d) =>
       fittedPqTopK(s, d, 0, 100, 10)
     },
 
@@ -1743,10 +1654,7 @@ FROM c ORDER BY sim DESC, vec_id LIMIT 10"""
     // cosine re-ranks the fixed 100-candidate budget. Composes the two
     // already-oracled fit machineries into one twin — deterministic
     // end to end, so candidate selection AND re-ranking replay exactly.
-    Decl("sim_ann_ivfpq_fitted", {
-      val approx = pqApproxSql("p")
-      val tcols = (0 until Similarity.PqSubspaces)
-        .map(i => s"t$i").mkString(", ")
+    Decl("sim_ann_ivfpq_fitted",
       s"""WITH ${fittedCtes("")},
 ${fittedPqCtesBody},
 e AS (SELECT vec_id, embedding, ${cellSqlOf("embedding")} AS cell,
@@ -1755,13 +1663,10 @@ $pqECodesSql
 q AS (SELECT embedding, ${pcellsSqlOf("embedding")} AS pcells,
 $pqQTablesSql
   FROM nef WHERE vec_id = 0),
-p AS (SELECT embedding AS qv, $tcols, UNNEST(pcells) AS pcell FROM q),
-c AS (SELECT e.vec_id, e.embedding, p.qv, $approx AS approx
-  FROM e JOIN p ON e.cell = p.pcell
-  ORDER BY approx DESC, e.vec_id LIMIT 100)
-SELECT vec_id, approx, ${cosLSql("embedding", "qv")} AS sim
-FROM c ORDER BY sim DESC, vec_id LIMIT 10"""
-    }) { (s, d) =>
+p AS (SELECT embedding AS qv, ${Similarity.sqlAdcTableCols},
+  UNNEST(pcells) AS pcell FROM q),
+${Similarity.sqlAdcTopK("p.qv", Similarity.sqlAdcTerms("p"),
+  gated = true, 100, 10)}""") { (s, d) =>
       fittedIvfPqTopK(s, d, 0, 100, 10)
     },
 

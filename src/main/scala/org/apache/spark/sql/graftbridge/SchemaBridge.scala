@@ -29,15 +29,30 @@ object SchemaBridge {
   private def isDataFile(n: String): Boolean =
     n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
 
+  /** Parquet summary files, which Spark's listing keeps and its schema
+    * inference reads before any data footer. */
+  private def isSummary(n: String): Boolean =
+    n.startsWith("_metadata") || n.startsWith("_common_metadata")
+
+  /** Names Spark's file listing drops (`_`/`.` prefixes, in-flight
+    * copies) — except summary files, which are refused before this
+    * applies. */
+  private def isHidden(n: String): Boolean =
+    (n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
+      n.endsWith("._COPYING_")
+
   /** The table's single parquet data file, or None when the layout needs
-    * Spark's general inference (0 or 2+ data files, nested dirs). */
+    * Spark's general inference: nested dirs, a summary file, or any
+    * entry besides the one `.parquet` file that Spark would read as data
+    * (extensionless files included). */
   private def singleDataFile(f: java.io.File): Option[java.io.File] =
     if (f.isFile) Some(f).filter(x => isDataFile(x.getName))
     else {
       val children = Option(f.listFiles()).getOrElse(Array.empty)
       if (children.exists(_.isDirectory)) None // partitioned layout
-      else children.filter(c => isDataFile(c.getName)) match {
-        case Array(one) => Some(one)
+      else if (children.exists(c => isSummary(c.getName))) None
+      else children.filterNot(c => isHidden(c.getName)) match {
+        case Array(one) if isDataFile(one.getName) => Some(one)
         case _ => None
       }
     }

@@ -3,9 +3,10 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shuffle-volume weak-scaling pins (the CI version of SCALING.md):
-  * shuffle write bytes are deterministic — no load, warm-up, or
-  * run-order noise — so the sf0.01 → sf0.1 growth ratio is a stable
-  * fingerprint of each operator's scale shape. These tests pin one
+  * shuffle volume ignores load, warm-up and run order, so the sf0.01 →
+  * sf0.1 growth ratio fingerprints each operator's scale shape. Record
+  * counts are the stable quantity; bytes also move with spill and heap,
+  * so byte ratios carry run-to-run noise. These tests pin one
   * representative per class so a regression that, say, drops map-side
   * combine from a sketch or sneaks a replication blowup into the LSH
   * join fails CI rather than a 100 TB run. Suites run sequentially

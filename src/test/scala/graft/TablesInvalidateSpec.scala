@@ -204,5 +204,21 @@ class TablesInvalidateSpec extends AnyFunSuite with SparkSuite {
     assert(org.apache.spark.sql.graftbridge.SchemaBridge
       .inferSingleFooter(spark, s"$dir/part.parquet").isEmpty,
       "partitioned layout must fall back (inference injects key columns)")
+    // one x.parquet beside a summary file (inference reads the summary
+    // first) or beside an extensionless file (Spark reads it as data)
+    val one = new java.io.File(s"$dir/multi.parquet").listFiles()
+      .filter(_.getName.endsWith(".parquet")).head.toPath
+    def oneFileDir(name: String, extra: String): String = {
+      val d = Files.createDirectory(java.nio.file.Paths.get(dir, name))
+      Files.copy(one, d.resolve("x.parquet"))
+      Files.copy(one, d.resolve(extra))
+      d.toString
+    }
+    for ((name, extra) <- Seq("summary" -> "_metadata",
+        "common" -> "_common_metadata", "noext" -> "part-00001")) {
+      assert(org.apache.spark.sql.graftbridge.SchemaBridge
+        .inferSingleFooter(spark, oneFileDir(name, extra)).isEmpty,
+        s"x.parquet beside $extra must fall back to job-based inference")
+    }
   }
 }
