@@ -1276,50 +1276,44 @@ object Similarity {
     // only, so pair volume is corpus/buckets-linear and the bucket key
     // shuffles — never an all-pairs cross. The cosine rides the exact
     // DecimalDot kernel, so the verify stage itself is oracled.
-    {
-      val bucketSql = lshPlanes.zipWithIndex.map { case (p, i) =>
-        s"(CASE WHEN ${sqlDotConst("embedding", p)} >= 0 " +
-          s"THEN ${1L << i} ELSE 0 END)"
-      }.mkString("(", " + ", ")")
-      Decl("dedup_semantic",
-        s"""WITH b AS (SELECT vec_id, embedding, $bucketSql AS bucket
-           |           FROM embeddings),
-           |cand AS (SELECT p.vec_id AS v1, e.vec_id AS v2, p.bucket,
-           |    unnest(p.embedding) AS x, unnest(e.embedding) AS y
-           |  FROM b p JOIN b e
-           |    ON p.bucket = e.bucket AND p.vec_id < e.vec_id
-           |  WHERE p.vec_id % 20 = 0),
-           |sims AS (SELECT v1, v2, bucket,
-           |    ${graft.functions.VectorOps.sqlDot("x", "y")} AS dot,
-           |    ${graft.functions.VectorOps.sqlDot("x", "x")} AS nx,
-           |    ${graft.functions.VectorOps.sqlDot("y", "y")} AS ny
-           |  FROM cand GROUP BY ALL)
-           |SELECT bucket, COUNT(*) AS n_pairs,
-           |  CAST(SUM(CASE WHEN dot / (sqrt(nx) * sqrt(ny)) >= 0.5
-           |           THEN 1 ELSE 0 END) AS BIGINT) AS n_sem_dups
-           |FROM sims GROUP BY bucket ORDER BY bucket""".stripMargin) {
-        (s, d) =>
-        import graft.functions.VectorOps.{cosineWithNorms, norm2}
-        val e = Tables.embeddings(s, d)
-          .select(col("vec_id"), col("embedding"),
-            lshBucketOf(col("embedding")).as("bucket"),
-            norm2(col("embedding")).as("n2"))
-        val probe = e.filter(col("vec_id") % 20 === 0)
-          .select(col("vec_id").as("v1"), col("bucket"),
-            col("embedding").as("emb1"), col("n2").as("n2a"))
-        probe.join(e.select(col("vec_id").as("v2"),
-            col("bucket").as("b2"), col("embedding").as("emb2"),
-            col("n2").as("n2b")),
-          col("bucket") === col("b2") && col("v1") < col("v2"))
-          .select(col("bucket"),
-            cosineWithNorms(col("emb1"), col("emb2"),
-              col("n2a"), col("n2b")).as("sim"))
-          .groupBy("bucket")
-          .agg(count(lit(1)).as("n_pairs"),
-            sum(when(col("sim") >= 0.5, 1L).otherwise(0L))
-              .as("n_sem_dups"))
-          .orderBy("bucket")
-      }
+    Decl("dedup_semantic",
+      s"""WITH b AS (SELECT vec_id, embedding, $lshBucketSql AS bucket
+         |           FROM embeddings),
+         |cand AS (SELECT p.vec_id AS v1, e.vec_id AS v2, p.bucket,
+         |    unnest(p.embedding) AS x, unnest(e.embedding) AS y
+         |  FROM b p JOIN b e
+         |    ON p.bucket = e.bucket AND p.vec_id < e.vec_id
+         |  WHERE p.vec_id % 20 = 0),
+         |sims AS (SELECT v1, v2, bucket,
+         |    ${graft.functions.VectorOps.sqlDot("x", "y")} AS dot,
+         |    ${graft.functions.VectorOps.sqlDot("x", "x")} AS nx,
+         |    ${graft.functions.VectorOps.sqlDot("y", "y")} AS ny
+         |  FROM cand GROUP BY ALL)
+         |SELECT bucket, COUNT(*) AS n_pairs,
+         |  CAST(SUM(CASE WHEN dot / (sqrt(nx) * sqrt(ny)) >= 0.5
+         |           THEN 1 ELSE 0 END) AS BIGINT) AS n_sem_dups
+         |FROM sims GROUP BY bucket ORDER BY bucket""".stripMargin) {
+      (s, d) =>
+      import graft.functions.VectorOps.{cosineWithNorms, norm2}
+      val e = Tables.embeddings(s, d)
+        .select(col("vec_id"), col("embedding"),
+          lshBucketOf(col("embedding")).as("bucket"),
+          norm2(col("embedding")).as("n2"))
+      val probe = e.filter(col("vec_id") % 20 === 0)
+        .select(col("vec_id").as("v1"), col("bucket"),
+          col("embedding").as("emb1"), col("n2").as("n2a"))
+      probe.join(e.select(col("vec_id").as("v2"),
+          col("bucket").as("b2"), col("embedding").as("emb2"),
+          col("n2").as("n2b")),
+        col("bucket") === col("b2") && col("v1") < col("v2"))
+        .select(col("bucket"),
+          cosineWithNorms(col("emb1"), col("emb2"),
+            col("n2a"), col("n2b")).as("sim"))
+        .groupBy("bucket")
+        .agg(count(lit(1)).as("n_pairs"),
+          sum(when(col("sim") >= 0.5, 1L).otherwise(0L))
+            .as("n_sem_dups"))
+        .orderBy("bucket")
     },
 
     // Contrastive-pair mining — the training-data prep step for dense

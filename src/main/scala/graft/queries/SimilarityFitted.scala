@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{Catalog, Decl, HiveTables, Tables}
+import graft.streaming.Ledger
 import graft.functions.VectorOps.{cosineWithNorms, dot, norm2, sqlCosList,
   sqlDotList}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -424,10 +425,8 @@ object SimilarityFitted {
   // not recompute the standing corpus's cell assignment per ingest
   // batch — it persists the assignment table once and APPENDS admitted
   // arrivals post-verdict. Both writes of a batch (its verdicts and
-  // its admissions) sit in per-batch version dirs made visible by ONE
-  // ledger row written last (the additiveUpsert commit discipline), so
-  // a crash between them leaves torn dirs no reader sees and the
-  // re-delivered batch id overwrites them deterministically —
+  // its admissions) sit in per-batch dirs committed by ONE row of the
+  // batch ledger (graft.streaming.Ledger states the protocol), so
   // at-least-once delivery becomes an exactly-once index.
   // StreamingSpec witnesses two consecutive micro-batches with a crash
   // injection: batch 2's verdicts MUST see batch 1's admissions.
@@ -443,24 +442,6 @@ object SimilarityFitted {
       org.apache.spark.sql.types.ArrayType(FloatType)),
     org.apache.spark.sql.types.StructField("n2", DoubleType),
     org.apache.spark.sql.types.StructField("cell", LongType)))
-
-  private def fsOf(s: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(s.sessionState.newHadoopConf())
-
-  private def pathExists(s: SparkSession, path: String): Boolean =
-    fsOf(s, path).exists(new org.apache.hadoop.fs.Path(path))
-
-  private def ledgerHas(s: SparkSession, ledger: String,
-      batchId: Long): Boolean =
-    pathExists(s, ledger) && s.read.parquet(ledger)
-      .filter(col("batch_id") === batchId).head(1).nonEmpty
-
-  private def committedBatchIds(s: SparkSession,
-      ledger: String): Array[Long] =
-    if (!pathExists(s, ledger)) Array.empty[Long]
-    else s.read.parquet(ledger)
-      .select("batch_id").collect().map(_.getLong(0)).distinct.sorted
 
   // ---- index EPOCHS (r12 verdict items 4–5): compaction and refit ----
   // An epoch is one ledger-committed snapshot dir pair under
@@ -487,7 +468,7 @@ object SimilarityFitted {
   private[graft] def committedEpoch(s: SparkSession,
       ledger: String): Option[(Long, Long)] = {
     val el = epochLedgerOf(ledger)
-    if (!pathExists(s, el)) None
+    if (!Ledger.exists(s, el)) None
     else s.read.parquet(el)
       .orderBy(col("epoch_id").desc).head(1).headOption
       .map(r => (r.getLong(0), r.getLong(1)))
@@ -498,17 +479,14 @@ object SimilarityFitted {
     * committed batch dirs (the r12 behavior). */
   private[graft] def annIndexView(s: SparkSession, indexDir: String,
       ledger: String): DataFrame = {
-    val ids = committedBatchIds(s, ledger)
-    val dirs = (committedEpoch(s, ledger) match {
+    val ids = Ledger.committed(s, ledger)
+    val dirs = committedEpoch(s, ledger) match {
       case Some((e, upto)) =>
         s"$indexDir/e$e/base" +:
           ids.filter(_ > upto).map(id => s"$indexDir/b$id").toSeq
       case None => ids.map(id => s"$indexDir/b$id").toSeq
-    }).filter(pathExists(s, _))
-    if (dirs.isEmpty)
-      s.createDataFrame(
-        s.sparkContext.emptyRDD[org.apache.spark.sql.Row], indexSchema)
-    else s.read.schema(indexSchema).parquet(dirs: _*)
+    }
+    Ledger.readDirs(s, dirs, indexSchema)
   }
 
   /** The index's CURRENT quantizer: the committed epoch's persisted
@@ -568,7 +546,7 @@ object SimilarityFitted {
     * Streaming.vacuumVersions discipline). */
   private[graft] def annIndexAdvanceEpoch(s: SparkSession, d: String,
       indexDir: String, ledger: String, refit: Boolean): Option[Long] = {
-    val ids = committedBatchIds(s, ledger)
+    val ids = Ledger.committed(s, ledger)
     if (ids.isEmpty) return None
     val upto = ids.max
     val prev = committedEpoch(s, ledger)
@@ -580,7 +558,7 @@ object SimilarityFitted {
       .write.mode("append").parquet(epochLedgerOf(ledger))
     // retirement (post-commit, idempotent): covered batch dirs and
     // superseded epoch dirs are invisible to the read path already
-    val fs = fsOf(s, indexDir)
+    val fs = Ledger.fs(s, indexDir)
     ids.filter(_ <= upto).foreach { id =>
       fs.delete(new org.apache.hadoop.fs.Path(s"$indexDir/b$id"), true)
     }
@@ -716,7 +694,7 @@ object SimilarityFitted {
     * compaction trigger and the long-horizon witness both read this. */
   private[graft] def annIndexLiveDirs(s: SparkSession,
       ledger: String): Int = {
-    val ids = committedBatchIds(s, ledger)
+    val ids = Ledger.committed(s, ledger)
     committedEpoch(s, ledger) match {
       case Some((_, upto)) => ids.count(_ > upto) + 1
       case None => ids.length
@@ -1053,49 +1031,44 @@ object SimilarityFitted {
     * fitted cell assignment lands as the ledger-committed version −1.
     * Idempotent on the ledger check. */
   private[graft] def annIndexBootstrap(s: SparkSession, d: String,
-      indexDir: String, ledger: String): Unit = {
-    if (ledgerHas(s, ledger, -1L)) return
-    indexFrameOf(
-      nonNull(Tables.embeddings(s, d)).filter(col("vec_id") % 10 =!= 3),
-      fittedCsStanding(s, d))
-      .write.mode("overwrite").parquet(s"$indexDir/b-1")
-    import s.implicits._
-    Seq(-1L).toDF("batch_id").write.mode("append").parquet(ledger)
-  }
+      indexDir: String, ledger: String): Unit =
+    Ledger.once(s, ledger, -1L)(
+      indexFrameOf(
+        nonNull(Tables.embeddings(s, d)).filter(col("vec_id") % 10 =!= 3),
+        fittedCsStanding(s, d))
+        .write.mode("overwrite").parquet(s"$indexDir/b-1"))
 
   /** One exactly-once admission micro-batch over the maintained index:
     * verdicts are computed against the COMMITTED index view (bootstrap
     * ∪ admitted arrivals of committed earlier batches — the second
-    * batch judges against the first batch's admissions), the batch's
-    * verdict rows and its admitted (non-dup) arrivals are written to
-    * per-batch dirs, and the ledger row lands LAST as the commit point
-    * covering both. Intra-batch pairs are judged against the index
-    * only (the declared batch-twin semantics); clustering arrivals
-    * among themselves is the keep action's job. */
+    * batch judges against the first batch's admissions), and the
+    * batch's verdict rows and its admitted (non-dup) arrivals land in
+    * per-batch dirs committed by one [[Ledger]] row. Intra-batch pairs
+    * are judged against the index only (the declared batch-twin
+    * semantics); clustering arrivals among themselves is the keep
+    * action's job. */
   private[graft] def annIndexBatch(s: SparkSession, d: String,
       batch: DataFrame, batchId: Long, indexDir: String,
-      verdictDir: String, ledger: String): Unit = {
-    if (ledgerHas(s, ledger, batchId)) return
-    // epoch-aware quantizer + view (r12 items 4–5): after a refit
-    // epoch, verdicts probe and admissions assign under the NEW
-    // persisted centroids; after a compaction the view unions O(1)
-    // dirs instead of one per committed batch
-    val fcs = annIndexCents(s, d, indexDir, ledger)
-    val index = annIndexView(s, indexDir, ledger)
-      .select(col("vec_id").as("vo"), col("embedding").as("emb2"),
-        col("n2").as("n2b"), col("cell"))
-    val verdicts =
-      verdictsAgainst(index, batch, fcs, broadcastArrivals = true)
-        .localCheckpoint(true) // one computation feeds both writes
-    verdicts.write.mode("overwrite").parquet(s"$verdictDir/b$batchId")
-    indexFrameOf(
-      batch.join(verdicts.filter(!col("is_dup")).select("vec_id"),
-        Seq("vec_id"), "leftsemi"),
-      fcs)
-      .write.mode("overwrite").parquet(s"$indexDir/b$batchId")
-    import s.implicits._
-    Seq(batchId).toDF("batch_id").write.mode("append").parquet(ledger)
-  }
+      verdictDir: String, ledger: String): Unit =
+    Ledger.once(s, ledger, batchId) {
+      // epoch-aware quantizer + view (r12 items 4–5): after a refit
+      // epoch, verdicts probe and admissions assign under the NEW
+      // persisted centroids; after a compaction the view unions O(1)
+      // dirs instead of one per committed batch
+      val fcs = annIndexCents(s, d, indexDir, ledger)
+      val index = annIndexView(s, indexDir, ledger)
+        .select(col("vec_id").as("vo"), col("embedding").as("emb2"),
+          col("n2").as("n2b"), col("cell"))
+      val verdicts =
+        verdictsAgainst(index, batch, fcs, broadcastArrivals = true)
+          .localCheckpoint(true) // one computation feeds both writes
+      verdicts.write.mode("overwrite").parquet(s"$verdictDir/b$batchId")
+      indexFrameOf(
+        batch.join(verdicts.filter(!col("is_dup")).select("vec_id"),
+          Seq("vec_id"), "leftsemi"),
+        fcs)
+        .write.mode("overwrite").parquet(s"$indexDir/b$batchId")
+    }
 
   // ---------------------------------------------------------------
   // DuckDB twin: the same fit + assignment, CTE by CTE

@@ -135,7 +135,7 @@ object StreamingBatch {
     // model (text_nb_train) is trained batch-side; Text.nbScore scores
     // documents against it per micro-batch under foreachBatch
     // (StreamingSpec drives the chunked/exactly-once form through
-    // Streaming.transformSink and proves chunked ≡ batch bit-exactly —
+    // Streaming.transformSinkBatch and proves chunked ≡ batch bit-exactly —
     // each doc's score depends only on its own tokens plus the static
     // model). This batch twin is the converged monitor: predictions
     // per class + the exact decimal sum of their scores, which is what

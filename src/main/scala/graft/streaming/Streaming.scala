@@ -1,9 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row,
+  SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
-  OutputMode, StatefulProcessor, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
+  GroupStateTimeout, OutputMode, StatefulProcessor, TimeMode, TimerValues,
+  ValueState}
+import org.apache.spark.sql.types.StructType
 
 /** Streaming surface (SURVEY.md §2 rows B39-B41). The reference (dask)
   * is batch-only — this tier is the engine's capability uplift, designed
@@ -120,6 +123,15 @@ object Streaming {
   final case class UserEvent(user_id: Long, ts_us: Long, value: Double)
   final case class UserRunning(user_id: Long, n_events: Long, sum_value: Double)
 
+  /** The one B41 running-aggregate step, shared by all three flavors
+    * below: a user's batch of events, in (ts_us, value) order, folded
+    * onto its previous running row (zero before the first batch). */
+  private def foldRunning(key: Long, prev: Option[UserRunning],
+      rows: Iterator[UserEvent]): UserRunning =
+    rows.toSeq.sortBy(e => (e.ts_us, e.value))
+      .foldLeft(prev.getOrElse(UserRunning(key, 0L, 0.0)))((acc, e) =>
+        UserRunning(key, acc.n_events + 1, acc.sum_value + e.value))
+
   /** B41 (new API): the same running aggregate as a Spark 4
     * `StatefulProcessor` for `transformWithState` — typed ValueState,
     * richer lifecycle (init/timers/close) than flatMapGroupsWithState.
@@ -135,11 +147,8 @@ object Streaming {
 
     override def handleInputRows(key: Long, rows: Iterator[UserEvent],
         timerValues: TimerValues): Iterator[UserRunning] = {
-      val prev =
-        if (state.exists()) state.get() else UserRunning(key, 0L, 0.0)
-      val next = rows.toSeq.sortBy(e => (e.ts_us, e.value))
-        .foldLeft(prev)((acc, e) =>
-          UserRunning(key, acc.n_events + 1, acc.sum_value + e.value))
+      val next =
+        foldRunning(key, Option.when(state.exists())(state.get()), rows)
       state.update(next)
       Iterator(next)
     }
@@ -313,11 +322,8 @@ object Streaming {
 
     override def handleInputRows(key: Long, rows: Iterator[UserEvent],
         timerValues: TimerValues): Iterator[UserRunning] = {
-      val prev =
-        if (state.exists()) state.get() else UserRunning(key, 0L, 0.0)
-      val next = rows.toSeq.sortBy(e => (e.ts_us, e.value))
-        .foldLeft(prev)((acc, e) =>
-          UserRunning(key, acc.n_events + 1, acc.sum_value + e.value))
+      val next =
+        foldRunning(key, Option.when(state.exists())(state.get()), rows)
       state.update(next)
       Iterator(next)
     }
@@ -357,10 +363,7 @@ object Streaming {
             state.remove()
             out.iterator
           } else {
-            val prev = state.getOption.getOrElse(UserRunning(uid, 0L, 0.0))
-            val sorted = rows.toSeq.sortBy(e => (e.ts_us, e.value))
-            val next = sorted.foldLeft(prev)((acc, e) =>
-              UserRunning(uid, acc.n_events + 1, acc.sum_value + e.value))
+            val next = foldRunning(uid, state.getOption, rows)
             state.update(next)
             if (withTimeout) state.setTimeoutDuration("1 hour")
             Iterator(next)
@@ -369,40 +372,25 @@ object Streaming {
   }
 
   /** Exactly-once ADDITIVE upsert of one micro-batch into a parquet
-    * target — the `foreachBatch` streaming→warehouse bridge.
-    * `foreachBatch` is at-least-once: after a crash the last batch is
-    * re-delivered with the SAME batchId, and an additive merge (here:
-    * per-user running sum/count) would double-count it. Two mechanisms
-    * close BOTH failure windows:
-    *
-    *  - the batch-id LEDGER gates replays: an id already committed is
-    *    a no-op;
-    *  - the merge writes a fresh VERSION DIRECTORY `target/v<batchId>`
-    *    computed from the last COMMITTED version (never from its own
-    *    output), and the ledger row — written last — is the commit
-    *    point. A crash between the version write and the ledger commit
-    *    therefore replays into the SAME version dir from the SAME
-    *    committed base: a deterministic overwrite, not a double merge.
-    *    (The round-9 layout merged in place, where exactly that window
-    *    double-counted — the versioned commit is the poor-man's form
-    *    of a transactional table format's snapshot+commit, which is
-    *    what production swaps in; it would also vacuum old versions,
-    *    which here accumulate O(#batches) like the ledger.)
+    * target — the `foreachBatch` streaming→warehouse bridge, committed
+    * under the [[Ledger]] protocol. An additive merge (here: per-user
+    * running sum/count) is exactly what a replay would double-count, so
+    * the merge writes a fresh VERSION DIRECTORY `target/v<batchId>`
+    * computed from the last COMMITTED version, never from its own
+    * output: a replay through the crash window recomputes the same dir
+    * from the same base. (A merge in place would read its own torn
+    * write back and double-count; old versions accumulate until
+    * [[vacuumVersions]] retires them.)
     *
     * Readers go through [[additiveUpsertRead]] (committed version
     * only). Scale: the merge is a key-partitioned groupBy of
-    * committed ∪ delta — no driver state beyond the 1-value ledger
-    * max; StreamingSpec witnesses the crash window with an injected
+    * committed ∪ delta — no driver state beyond the ledger's ids;
+    * StreamingSpec witnesses the crash window with an injected
     * first-attempt failure between the two writes. */
   def additiveUpsertBatch(batch: DataFrame, batchId: Long,
-      target: String, ledger: String): Unit = {
-    val spark = batch.sparkSession
-    if (readOpt(spark, ledger).exists(
-        _.filter(col("batch_id") === batchId).head(1).nonEmpty)) return
-    additiveUpsertVersion(batch, batchId, target, ledger)
-    import spark.implicits._
-    Seq(batchId).toDF("batch_id").write.mode("append").parquet(ledger)
-  }
+      target: String, ledger: String): Unit =
+    Ledger.once(batch.sparkSession, ledger, batchId)(
+      additiveUpsertVersion(batch, batchId, target, ledger))
 
   /** The merge + version-dir write WITHOUT the ledger commit — the
     * first half of [[additiveUpsertBatch]], exposed so StreamingSpec
@@ -423,14 +411,10 @@ object Streaming {
     * highest LEDGER-COMMITTED batch id (a version dir without its
     * ledger row is an uncommitted torn write and is never read). Empty
     * typed frame before the first commit. */
-  def additiveUpsertRead(spark: org.apache.spark.sql.SparkSession,
-      target: String, ledger: String): DataFrame = {
+  def additiveUpsertRead(spark: SparkSession, target: String,
+      ledger: String): DataFrame = {
     import spark.implicits._
-    val committed = readOpt(spark, ledger).flatMap { df =>
-      val r = df.agg(max(col("batch_id"))).head()
-      if (r.isNullAt(0)) None else Some(r.getLong(0))
-    }
-    committed match {
+    Ledger.committed(spark, ledger).lastOption match {
       case Some(v) => spark.read.parquet(s"$target/v$v")
       case None => Seq.empty[(Long, Double, Long)]
         .toDF("user_id", "sum_value", "n_events")
@@ -438,28 +422,26 @@ object Streaming {
   }
 
   /** Retention vacuum for [[additiveUpsertBatch]]'s version
-    * directories — the piece the upsert docstring promises a
-    * transactional format would add: delete `v<id>` snapshots older
-    * than the newest committed version, retaining the last `keep`
-    * committed ones. Never touches dirs at-or-above the newest
-    * committed id (a dir there is an in-flight or torn write that its
-    * own replay deterministically overwrites) and never the ledger
-    * (the append-only commit log is the atomicity anchor; compacting
-    * it needs a write-then-swap protocol — a real table format's job,
-    * documented not imitated). Safe at any point between batches:
-    * readers resolve through the ledger max, which `keep >= 1`
-    * preserves by construction. Returns the deleted version ids. */
-  def vacuumVersions(spark: org.apache.spark.sql.SparkSession,
-      target: String, ledger: String, keep: Int = 2): Seq[Long] = {
+    * directories — the piece a transactional format would add: delete
+    * `v<id>` snapshots older than the newest committed version,
+    * retaining the last `keep` committed ones. Never touches dirs
+    * at-or-above the newest committed id (a dir there is an in-flight
+    * or torn write that its own replay deterministically overwrites)
+    * and never the ledger (the append-only commit log is the atomicity
+    * anchor; compacting it needs a write-then-swap protocol — a real
+    * table format's job, documented not imitated). Safe at any point
+    * between batches: readers resolve through the ledger max, which
+    * `keep >= 1` preserves by construction. Returns the deleted version
+    * ids. */
+  def vacuumVersions(spark: SparkSession, target: String, ledger: String,
+      keep: Int = 2): Seq[Long] = {
     require(keep >= 1, "must retain at least the newest committed version")
-    val committed = readOpt(spark, ledger)
-      .map(_.select("batch_id").collect().map(_.getLong(0)).sorted)
-      .getOrElse(Array.empty[Long])
+    val committed = Ledger.committed(spark, ledger)
     if (committed.isEmpty) return Nil
     val retained = committed.takeRight(keep).toSet
     val newest = committed.last
     val p = new org.apache.hadoop.fs.Path(target)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = Ledger.fs(spark, target)
     if (!fs.exists(p)) return Nil
     // a sub-cutoff dir is either a superseded committed snapshot or an
     // abandoned torn write whose id later recommitted into the same
@@ -477,93 +459,53 @@ object Streaming {
     dead.map(_._1).sorted
   }
 
-  /** Existence-guarded parquet read via the Hadoop FS API — the paths
-    * may live on any filesystem (HDFS/object store), not just local
-    * disk. */
-  private def readOpt(spark: org.apache.spark.sql.SparkSession,
-      path: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(p)) Some(spark.read.parquet(path)) else None
-  }
-
   /** STREAMING DEAD-LETTER channel — the quarantine surface under a
     * stream: each micro-batch splits on a row-level gate, passing rows
     * append to the main channel and failing rows to the dead-letter
-    * channel, exactly once. Same commit discipline as the additive
-    * upsert: both splits write per-batch directories (`b<batchId>` —
-    * a replay overwrites the same dirs deterministically), and the
-    * ledger row written LAST is the commit point; readers
-    * ([[gatedSplitRead]]) union only ledger-committed batch dirs, so
-    * a crash between the split writes and the ledger commit is
-    * invisible — the re-delivered batch lands exactly once on BOTH
-    * channels. At 100 TB/day this is how one poison record costs one
-    * dead-letter row instead of the stream (the batch analogue is
-    * dq_expectations_route / scan_quarantine). */
+    * channel, exactly once on BOTH channels — both splits write
+    * per-batch directories (`b<batchId>`) committed under the
+    * [[Ledger]] protocol, and readers ([[gatedSplitRead]]) union only
+    * ledger-committed batch dirs. At 100 TB/day this is how one poison
+    * record costs one dead-letter row instead of the stream (the batch
+    * analogue is dq_expectations_route / scan_quarantine). */
   def gatedSplitBatch(batch: DataFrame, batchId: Long, gate: Column,
-      okPath: String, dlqPath: String, ledger: String): Unit = {
-    val spark = batch.sparkSession
-    if (readOpt(spark, ledger).exists(
-        _.filter(col("batch_id") === batchId).head(1).nonEmpty)) return
+      okPath: String, dlqPath: String, ledger: String): Unit =
+    Ledger.once(batch.sparkSession, ledger, batchId)(
+      gatedSplitVersion(batch, batchId, gate, okPath, dlqPath))
+
+  /** The split writes WITHOUT the ledger commit — exposed so
+    * StreamingSpec can stage the crash window. */
+  def gatedSplitVersion(batch: DataFrame, batchId: Long, gate: Column,
+      okPath: String, dlqPath: String): Unit = {
     // a NULL gate verdict is a failing row — unjudgeable data belongs
     // in the dead letter channel, never silently dropped
     batch.filter(coalesce(gate, lit(false)))
       .write.mode("overwrite").parquet(s"$okPath/b$batchId")
     batch.filter(!coalesce(gate, lit(false)))
       .write.mode("overwrite").parquet(s"$dlqPath/b$batchId")
-    import spark.implicits._
-    Seq(batchId).toDF("batch_id").write.mode("append").parquet(ledger)
   }
 
-  /** The split writes WITHOUT the ledger commit — exposed so
-    * StreamingSpec can stage the crash window. */
-  def gatedSplitVersion(batch: DataFrame, batchId: Long, gate: Column,
-      okPath: String, dlqPath: String): Unit = {
-    batch.filter(coalesce(gate, lit(false)))
-      .write.mode("overwrite").parquet(s"$okPath/b$batchId")
-    batch.filter(!coalesce(gate, lit(false)))
-      .write.mode("overwrite").parquet(s"$dlqPath/b$batchId")
-  }
-
-  /** Committed view of one channel: the union of ledger-committed
-    * batch directories (uncommitted torn writes are invisible).
-    * Empty-channel reads need the caller's schema — day-zero streams
-    * have no committed batch to infer from. */
-  def gatedSplitRead(spark: org.apache.spark.sql.SparkSession,
-      path: String, ledger: String,
-      schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    val ids = readOpt(spark, ledger)
-      .map(_.select("batch_id").collect().map(_.getLong(0)).sorted)
-      .getOrElse(Array.empty[Long])
-    val dirs = ids.map(id => s"$path/b$id")
-      .filter(p => new org.apache.hadoop.fs.Path(p)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-        .exists(new org.apache.hadoop.fs.Path(p)))
-    if (dirs.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.schema(schema).parquet(dirs.toSeq: _*)
-  }
+  /** Committed view of one per-batch channel (`b<id>` dirs under
+    * `path`): the union of the ledger-committed batch directories
+    * (uncommitted torn writes are invisible). Empty-channel reads need
+    * the caller's schema — day-zero streams have no committed batch to
+    * infer from. */
+  def gatedSplitRead(spark: SparkSession, path: String, ledger: String,
+      schema: StructType): DataFrame =
+    Ledger.readDirs(spark,
+      Ledger.committed(spark, ledger).map(id => s"$path/b$id").toSeq,
+      schema)
 
   /** STREAMING INFERENCE channel — apply an arbitrary batch transform
     * (e.g. scoring a micro-batch against a broadcast model,
-    * Text.nbScore) and land the results exactly once: per-batch
-    * directory write, then the ledger row as the commit point — the
-    * same discipline as [[gatedSplitBatch]]. A replayed batch id
-    * short-circuits on the ledger check (or deterministically
-    * overwrites its own directory if the crash hit the window), so
-    * at-least-once delivery from the source becomes exactly-once
-    * output. Readers union committed dirs via [[gatedSplitRead]]. */
+    * Text.nbScore) and land the results exactly once: one per-batch
+    * directory committed under the [[Ledger]] protocol. Readers union
+    * committed dirs via [[gatedSplitRead]]. */
   def transformSinkBatch(batch: DataFrame, batchId: Long,
       transform: DataFrame => DataFrame, target: String,
-      ledger: String): Unit = {
-    val spark = batch.sparkSession
-    if (readOpt(spark, ledger).exists(
-        _.filter(col("batch_id") === batchId).head(1).nonEmpty)) return
-    transform(batch).write.mode("overwrite").parquet(s"$target/b$batchId")
-    import spark.implicits._
-    Seq(batchId).toDF("batch_id").write.mode("append").parquet(ledger)
-  }
+      ledger: String): Unit =
+    Ledger.once(batch.sparkSession, ledger, batchId)(
+      transform(batch).write.mode("overwrite").parquet(s"$target/b$batchId"))
 
   /** END-TO-END STREAMING CURATION commit — the curation pieces
     * (PERMISSIVE-parse quarantine, in-engine model scoring,
@@ -574,11 +516,7 @@ object Streaming {
     *   dropped   (scored rows the sampling policy rejects — persisted,
     *              not discarded: mix policies get re-tuned and a
     *              dropped row is a re-admissible asset)
-    * — into per-batch version dirs, with the ledger row written LAST
-    * as the commit point (the additiveUpsertBatch protocol). A crash
-    * anywhere before the ledger row leaves torn dirs no reader sees;
-    * the re-delivered batch id deterministically overwrites them, so
-    * at-least-once delivery becomes exactly-once curated output.
+    * — into per-batch dirs committed by one [[Ledger]] row.
     * `score` runs per micro-batch against static broadcast-sized
     * model frames — per-row scoring is chunking-invariant, so the
     * streamed result is bit-equal to the declared batch twin
@@ -586,15 +524,10 @@ object Streaming {
     * injected first-attempt crash. */
   def curationBatch(batch: DataFrame, batchId: Long, okGate: Column,
       score: DataFrame => DataFrame, keepGate: Column, keptPath: String,
-      droppedPath: String, dlqPath: String, ledger: String): Unit = {
-    val spark = batch.sparkSession
-    if (readOpt(spark, ledger).exists(
-        _.filter(col("batch_id") === batchId).head(1).nonEmpty)) return
-    curationVersion(batch, batchId, okGate, score, keepGate,
-      keptPath, droppedPath, dlqPath)
-    import spark.implicits._
-    Seq(batchId).toDF("batch_id").write.mode("append").parquet(ledger)
-  }
+      droppedPath: String, dlqPath: String, ledger: String): Unit =
+    Ledger.once(batch.sparkSession, ledger, batchId)(
+      curationVersion(batch, batchId, okGate, score, keepGate,
+        keptPath, droppedPath, dlqPath))
 
   /** The three channel writes WITHOUT the ledger commit — exposed so
     * StreamingSpec can stage a crash landing inside the window. */
@@ -611,38 +544,11 @@ object Streaming {
       .write.mode("overwrite").parquet(s"$droppedPath/b$batchId")
   }
 
-  /** Wire [[curationBatch]] under a streaming query. */
-  def curationSink(lines: DataFrame, parse: DataFrame => DataFrame,
-      okGate: Column, score: DataFrame => DataFrame, keepGate: Column,
-      keptPath: String, droppedPath: String, dlqPath: String,
-      ledger: String): org.apache.spark.sql.streaming.DataStreamWriter[
-      org.apache.spark.sql.Row] =
-    lines.writeStream.foreachBatch(
-      (b: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        curationBatch(parse(b.toDF()), id, okGate, score, keepGate,
-          keptPath, droppedPath, dlqPath, ledger))
-
-  /** Wire [[transformSinkBatch]] under a streaming query. */
-  def transformSink(events: DataFrame, transform: DataFrame => DataFrame,
-      target: String, ledger: String): org.apache.spark.sql.streaming
-      .DataStreamWriter[org.apache.spark.sql.Row] =
+  /** Wire a per-batch sink under a streaming query: `foreachBatch` hands
+    * `perBatch` each micro-batch with its id — e.g.
+    * `sink(events)(gatedSplitBatch(_, _, gate, ok, dlq, ledger))`. */
+  def sink(events: DataFrame)(perBatch: (DataFrame, Long) => Unit)
+      : DataStreamWriter[Row] =
     events.writeStream.foreachBatch(
-      (b: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        transformSinkBatch(b.toDF(), id, transform, target, ledger))
-
-  /** Wire [[gatedSplitBatch]] under a streaming query. */
-  def gatedSplitSink(events: DataFrame, gate: Column, okPath: String,
-      dlqPath: String, ledger: String): org.apache.spark.sql.streaming
-      .DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream.foreachBatch(
-      (b: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        gatedSplitBatch(b.toDF(), id, gate, okPath, dlqPath, ledger))
-
-  /** Wire [[additiveUpsertBatch]] under a streaming query. */
-  def additiveUpsertSink(events: DataFrame, target: String,
-      ledger: String): org.apache.spark.sql.streaming.DataStreamWriter[
-      org.apache.spark.sql.Row] =
-    events.writeStream.foreachBatch(
-      (b: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        additiveUpsertBatch(b.toDF(), id, target, ledger))
+      (b: Dataset[Row], id: Long) => perBatch(b.toDF(), id))
 }

@@ -15,6 +15,12 @@ case class Ev(event_id: Long, ts: Timestamp, event_type: String,
     user_id: Long, value: Double)
 case class ArrVec(vec_id: Long, embedding: Seq[Float])
 
+/** Crash-injection switch for a UDF: executor tasks run in this JVM
+  * under local mode, so one JVM-wide flag arms exactly one throw. */
+object CrashOnce {
+  val armed = new java.util.concurrent.atomic.AtomicBoolean(false)
+}
+
 class StreamingSpec extends AnyFunSuite with SparkSuite {
 
   private def ts(minute: Int): Timestamp =
@@ -545,8 +551,8 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
       .createTempDirectory("graft_upsert").toString
     val (target, ledger) = (s"$base/target", s"$base/ledger")
     val input = MemoryStream[Ev]
-    val q = Streaming.additiveUpsertSink(input.toDF(), target, ledger)
-      .start()
+    val q = Streaming.sink(input.toDF())(
+      Streaming.additiveUpsertBatch(_, _, target, ledger)).start()
     try {
       input.addData(Ev(1, ts(5), "click", 1, 2.0), Ev(2, ts(6), "click", 1, 3.0))
       q.processAllAvailable()
@@ -687,6 +693,56 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
       s"re-delivered batch did not land exactly once: $got")
   }
 
+  test("transform sink first-execution failure under a real streaming " +
+    "restart: the transform's UDF throws, no ledger row and no row is " +
+    "visible, and the re-delivered batch lands exactly once") {
+    import spark.implicits._
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.types.{DoubleType, LongType, StructField,
+      StructType}
+    implicit val ctx = spark.sqlContext
+    val base = java.nio.file.Files
+      .createTempDirectory("graft_tfcrash").toString
+    val (target, ledger, ck) = (s"$base/target", s"$base/ledger", s"$base/ck")
+    // the crash lands inside the transform's own write job: the UDF
+    // throws on its first execution, in an executor task
+    CrashOnce.armed.set(true)
+    val doubled = udf { (v: Double) =>
+      if (CrashOnce.armed.getAndSet(false))
+        throw new RuntimeException("injected first-execution crash")
+      v * 2
+    }.asNondeterministic()
+    def transform(b: DataFrame): DataFrame =
+      b.select(col("event_id"), doubled(col("value")).as("doubled"))
+    val schema = StructType(Seq(StructField("event_id", LongType),
+      StructField("doubled", DoubleType)))
+    def got = Streaming.gatedSplitRead(spark, target, ledger, schema)
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).sorted.toSeq
+    val input = MemoryStream[Ev]
+    def start() = Streaming.sink(input.toDF())(
+        Streaming.transformSinkBatch(_, _, transform, target, ledger))
+      .option("checkpointLocation", ck).start()
+    var q = start()
+    input.addData(Ev(1, ts(5), "click", 1, 2.0), Ev(2, ts(6), "view", 2, 3.5))
+    intercept[Exception] { q.processAllAvailable() } // batch 0 fails
+    assert(!CrashOnce.armed.get, "the injected failure must actually have fired")
+    assert(!new java.io.File(ledger).exists,
+      "a failed transform must leave no ledger row")
+    assert(got.isEmpty, s"a failed transform's rows became visible: $got")
+    // operational restart: same checkpoint, batch 0 re-delivers with the
+    // same id; a following batch commits normally
+    q = start()
+    try {
+      q.processAllAvailable()
+      input.addData(Ev(3, ts(7), "click", 1, 1.0))
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(got == Seq(1L -> 4.0, 2L -> 7.0, 3L -> 2.0),
+      s"re-delivered batch did not land exactly once: $got")
+    assert(spark.read.parquet(ledger).collect().map(_.getLong(0)).sorted
+      .toSeq == Seq(0L, 1L))
+  }
+
   test("streaming dead-letter channel: the gate splits every " +
     "micro-batch exactly once, a null verdict routes to dead-letter, " +
     "and the torn-write crash window replays cleanly") {
@@ -702,7 +758,8 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
     def dlqRows = Streaming.gatedSplitRead(spark, dlq, ledger, schema)
       .collect().map(_.getAs[Long]("event_id")).toSet
     val input = MemoryStream[Ev]
-    val q = Streaming.gatedSplitSink(input.toDF(), gate, ok, dlq, ledger)
+    val q = Streaming.sink(input.toDF())(
+        Streaming.gatedSplitBatch(_, _, gate, ok, dlq, ledger))
       .option("checkpointLocation", s"$base/ck").start()
     try {
       input.addData(Ev(1, ts(5), "click", 1, 2.0),
@@ -919,8 +976,8 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
     assert(expected.nonEmpty)
     val stream = spark.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", 1).parquet(src)
-    val q = Streaming.transformSink(
-        stream, b => Text.nbScore(b, model), target, ledger)
+    val q = Streaming.sink(stream)(Streaming.transformSinkBatch(_, _,
+        b => Text.nbScore(b, model), target, ledger))
       .option("checkpointLocation", s"$base/ck").start()
     try q.processAllAvailable() finally q.stop()
     val committed = spark.read.parquet(ledger)
@@ -1111,8 +1168,9 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
       s"torn batch-1 writes leaked into the committed view: $committedMid")
     // operational restart through the PUBLIC wiring, same checkpoint —
     // batch 1 re-delivers with the same id and lands exactly once
-    q = Streaming.curationSink(input.toDF(), parse _, okGate, score _,
-        keepGate, kept, dropped, dlq, ledger)
+    q = Streaming.sink(input.toDF())((b, id) =>
+        Streaming.curationBatch(parse(b), id, okGate, score _, keepGate,
+          kept, dropped, dlq, ledger))
       .option("checkpointLocation", ck).start()
     q.processAllAvailable()
     q.stop()
