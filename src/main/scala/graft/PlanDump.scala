@@ -30,7 +30,8 @@ object PlanDump {
     "window_rolling_corr" -> "five power sums over ONE window spec",
     "bucketed_join" -> "co-located bucket scan, no exchange on either side",
     "merge_upsert" -> "single full-outer shuffle join (the MERGE dataflow)",
-    "graph_components" -> "per-round join + min-agg (plan of one round)",
+    "graph_components" -> ("vertex rejoin over checkpointed labels + " +
+      "comp_size window (the rounds sit behind localCheckpoint)"),
     "time_autocorr" -> "hourly count series + lag window + exact power sums",
     "window_streak" -> "gaps-and-islands: three windows, one shuffle",
     "join_asof_tolerance" -> "union-tag as-of window with gap gate",

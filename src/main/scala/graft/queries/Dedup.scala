@@ -159,6 +159,31 @@ object Dedup {
     * parallel and AQE-skew-splittable. */
   private[graft] val BucketCap = 256
 
+  /** Every index pair i < j of the array column `arr`, one row each:
+    * the `carry` columns plus `p1` = arr[i] and `p2` = arr[j]. The
+    * caller sorts `arr` (sort_array), so for distinct elements the
+    * index order IS the element order: each unordered pair comes out
+    * exactly once, already oriented p1 < p2 — no least/greatest
+    * normalization, and no dependence on the order collect_list saw
+    * the rows in. Two map-side Generates: posexplode gives (i, p1),
+    * then explode(slice(arr, i + 2, size - i - 1)) gives the elements
+    * after it (slice is 1-based, so i + 2 is 0-based index i + 1; the
+    * length is 0 at i = size − 1, and a one-element array yields no
+    * pair). Per-row memory is the group's own array, O(group): the
+    * O(group²) pair array is never materialized, unlike a
+    * transform-of-slices + flatten, which builds it whole per group.
+    * The group size is bounded only by the caller — [[BucketCap]] on
+    * the bucket paths ([[bucketPairs]]); the vocabulary or the max
+    * degree in cooccur_pmi and graph_jaccard. */
+  private[graft] def pairsWithin(grouped: DataFrame, arr: String,
+      carry: String*): DataFrame = {
+    val a = col(arr)
+    grouped.select(carry.map(col) ++
+        Seq(posexplode(a).as(Seq("i", "p1")), a): _*)
+      .select(carry.map(col) ++ Seq(col("p1"),
+        explode(slice(a, col("i") + 2, size(a) - col("i") - 1)).as("p2")): _*)
+  }
+
   /** Split banded rows into (small-bucket rows, oversized-bucket rows)
     * by bucket cardinality over `keys`. The input is localCheckpoint'd
     * first so the signature pipeline is computed once, not once per
@@ -190,17 +215,6 @@ object Dedup {
       ck.join(big, keys))
   }
 
-  /** LSH candidate pairs (d1 < d2), distinct — the content-based
-    * blocking stage shared by every pairwise dedup scorer. Bucket-
-    * grouping instead of a band self-join — one shuffle on (band,
-    * bhash), the signature pipeline computed exactly once (a self-join
-    * re-evaluates it per side; no ReusedExchange for differently-
-    * aliased subplans), in-bucket pair expansion bounded by
-    * [[BucketCap]] (oversized buckets take the self-join path — see
-    * [[splitBuckets]]); least/greatest orders each pair
-    * deterministically whatever order collect_list saw the rows in.
-    * Returned frame is localCheckpoint'd: every caller reads it at
-    * least twice (candIds + the verify join). */
   /** All distinct in-bucket pairs of the OVERSIZED bucket rows via a
     * salted self-join: each row gets a chunk id (hash of doc_id — NOT
     * doc_id mod C, which degenerates when ids share a stride), the
@@ -263,25 +277,41 @@ object Dedup {
           when(aFirst, col(p + "_b")).otherwise(col(p + "_a")).as(p + "_2")): _*)
   }
 
-  private[graft] def candidatePairs(docs: DataFrame): DataFrame = {
-    val (small, big) = splitBuckets(bands(sigArray(docs)), Seq("band", "bhash"))
-    val smallPairs = small
-      .groupBy("band", "bhash")
-      .agg(collect_list(col("doc_id")).as("ids"))
-      .filter(size(col("ids")) > 1)
-      .select(explode(flatten(expr(
-        """transform(ids, (x, i) ->
-          |  transform(slice(ids, i + 2, size(ids)),
-          |    y -> named_struct('d1', least(x, y), 'd2', greatest(x, y))))"""
-          .stripMargin))).as("p"))
-      .select(col("p.d1").as("d1"), col("p.d2").as("d2"))
-    val bigPairs = saltedSelfPairs(big, Seq("band", "bhash"), Seq("doc_id"))
-      .select(col("doc_id_1").as("d1"), col("doc_id_2").as("d2"))
+  /** All distinct in-bucket pairs of `banded`, bucketed by `keys` —
+    * the blocking protocol shared by the MinHash and SimHash
+    * candidate stages. Bucket-grouping instead of a band self-join —
+    * one shuffle on the bucket key, the signature pipeline computed
+    * exactly once (a self-join re-evaluates it per side; no
+    * ReusedExchange for differently-aliased subplans), in-bucket pair
+    * expansion bounded by [[BucketCap]]: small buckets expand through
+    * [[pairsWithin]] over their doc_id-sorted rows, oversized ones
+    * take [[saltedSelfPairs]] (see [[splitBuckets]]). `payload` must
+    * start with `doc_id`; each pair comes out once as `<p>_1`/`<p>_2`
+    * ordered by doc_id on both paths, whatever order collect_list saw
+    * the rows in. */
+  private[graft] def bucketPairs(banded: DataFrame, keys: Seq[String],
+      payload: Seq[String]): DataFrame = {
+    val (small, big) = splitBuckets(banded, keys)
+    val grouped = small.groupBy(keys.map(col): _*)
+      .agg(sort_array(collect_list(struct(payload.map(col): _*))).as("xs"))
+    val smallPairs = pairsWithin(grouped, "xs")
+      .select(payload.map(p => col(s"p1.$p").as(p + "_1")) ++
+        payload.map(p => col(s"p2.$p").as(p + "_2")): _*)
+    smallPairs.unionByName(saltedSelfPairs(big, keys, payload)).distinct()
+  }
+
+  /** LSH candidate pairs (d1 < d2), distinct — the content-based
+    * blocking stage shared by every pairwise dedup scorer:
+    * [[bucketPairs]] over the (band, bhash) buckets. Returned frame is
+    * localCheckpoint'd: every caller reads it at least twice (candIds +
+    * the verify join). */
+  private[graft] def candidatePairs(docs: DataFrame): DataFrame =
     // EAGER: the verify stage references this frame up to four times
     // inside one job (candIds union × 2 + both join sides' pruning) —
     // see the splitBuckets note for why lazy loses there
-    smallPairs.unionByName(bigPairs).distinct().localCheckpoint()
-  }
+    bucketPairs(bands(sigArray(docs)), Seq("band", "bhash"), Seq("doc_id"))
+      .select(col("doc_id_1").as("d1"), col("doc_id_2").as("d2"))
+      .localCheckpoint()
 
   /** Candidate near-dup pairs with exact shingle Jaccard:
     * (d1 < d2, jaccard) over [[candidatePairs]]. */
@@ -385,9 +415,12 @@ object Dedup {
 
   /** The propagation loop over an ARBITRARY verified edge frame
     * (d1, d2) and vertex universe (doc_id) — the caller has already
-    * applied its similarity threshold. Factored out so other verified
-    * graphs (the embedding-ANN keep action in Similarity) reuse the
-    * exact converge-or-throw loop instead of reimplementing it. */
+    * applied its similarity threshold. Factored out so other graphs
+    * (the embedding-ANN keep action in SimilarityFitted, Warehouse's
+    * graph_components) reuse the exact converge-or-throw loop instead
+    * of reimplementing it. The loop adds each edge's reverse itself:
+    * one direction per edge suffices, and passing both only doubles
+    * the edge frame every round re-reads (same labels — DedupSpec). */
   private[graft] def componentsFromEdges(vertices: DataFrame,
       edges: DataFrame): DataFrame = {
     val bidir = edges.unionByName(
@@ -891,28 +924,9 @@ object Dedup {
       // them, while the oracle's equi-join drops NULL keys — mirror
       // dedup_near's explicit filter (see its docs CTE).
       val docs = Tables.documents(s, d).filter(col("text").isNotNull)
-      val banded = simhashBanded(docs)
-      // bucket-grouping, as in dedup_near: one shuffle, no self-join;
-      // oversized buckets take the self-join path (splitBuckets).
-      val (smallB, bigB) = splitBuckets(banded, Seq("band", "bval"))
-      val smallPairs = smallB
-        .groupBy("band", "bval")
-        .agg(collect_list(struct(col("doc_id"), col("simhash"))).as("xs"))
-        .filter(size(col("xs")) > 1)
-        .select(explode(flatten(expr(
-          """transform(xs, (x, i) ->
-            |  transform(slice(xs, i + 2, size(xs)),
-            |    y -> named_struct(
-            |      'd1', least(x.doc_id, y.doc_id),
-            |      'd2', greatest(x.doc_id, y.doc_id),
-            |      'hamming', bit_count(x.simhash ^ y.simhash))))"""
-            .stripMargin))).as("p"))
-        .select(col("p.d1").as("d1"), col("p.d2").as("d2"), col("p.hamming"))
-      val bigPairs =
-        saltedSelfPairs(bigB, Seq("band", "bval"), Seq("doc_id", "simhash"))
-          .select(col("doc_id_1").as("d1"), col("doc_id_2").as("d2"),
-            expr("bit_count(simhash_1 ^ simhash_2)").as("hamming"))
-      val cand = smallPairs.unionByName(bigPairs).distinct()
+      val cand = bucketPairs(simhashBanded(docs), Seq("band", "bval"),
+          Seq("doc_id", "simhash"))
+        .select(expr("bit_count(simhash_1 ^ simhash_2)").as("hamming"))
       cand.agg(count(lit(1)).as("n_candidates"),
         coalesce(sum(when(col("hamming") <= 8, 1L).otherwise(0L)), lit(0L))
           .as("n_near_dups"),

@@ -1322,11 +1322,10 @@ object Text {
       // the distinct's — 5 exchanges end to end. The per-doc token SET
       // is vocabulary-bounded, so ONE groupBy(doc_id) collects it as a
       // sorted array (subsuming the distinct — collect_set dedups) and
-      // the ordered pairs (a.tok < b.tok ≡ index pairs i < j of the
-      // sorted-distinct array: sort_array and the string `<` share
-      // UTF8 binary order) explode MAP-SIDE via two Generates. Same
-      // pair multiset ⇒ identical c12/df/pmi (oracle bit-identical
-      // tri-scale). Plan (cooccur_pmi_{before,after}.txt): the pair
+      // Dedup.pairsWithin explodes its ordered pairs MAP-SIDE (a.tok <
+      // b.tok, since sort_array and the string `<` share UTF8 binary
+      // order — see its scaladoc). Same pair multiset ⇒ identical
+      // c12/df/pmi. Plan (cooccur_pmi_{before,after}.txt): the pair
       // join — broadcast at test scale, a full presence shuffle once
       // pres outgrows the threshold at production scale — is GONE,
       // replaced by two whole-stage Generates feeding the (t1,t2)
@@ -1342,11 +1341,8 @@ object Text {
       val df = grouped.select(explode(col("arr")).as("tok"))
         .groupBy("tok").agg(count(lit(1)).as("df"))
         .localCheckpoint()
-      val pair = grouped
-        .select(posexplode(col("arr")).as(Seq("i", "t1")), col("arr"))
-        .select(col("t1"), explode(
-          slice(col("arr"), col("i") + 2, size(col("arr")) - col("i") - 1))
-          .as("t2"))
+      val pair = Dedup.pairsWithin(grouped, "arr")
+        .select(col("p1").as("t1"), col("p2").as("t2"))
         .groupBy("t1", "t2")
         .agg(count(lit(1)).as("c12"))
         .filter(col("c12") >= 5)

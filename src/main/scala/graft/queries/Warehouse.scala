@@ -28,8 +28,9 @@ import org.apache.spark.sql.types._
   *    reads co-located buckets with NO exchange — the amortize-the-
   *    shuffle pattern that matters most at 100 TB;
   *  - connected components is O(diameter) rounds of join + min-agg —
-  *    label propagation, each round shuffle-parallel on the node key;
-  *    the driver sees only a one-scalar convergence check per round.
+  *    label propagation (Dedup.componentsFromEdges), each round
+  *    shuffle-parallel on the node key; the driver sees one count of
+  *    changed labels every second round.
   */
 object Warehouse {
 
@@ -400,15 +401,14 @@ object Warehouse {
 
     // Connected components over the supplier co-order graph (suppliers
     // linked when they serve the same order; edge set sparsified to a
-    // deterministic 2% of orders). Spark side: min-label propagation —
-    // O(diameter) rounds of join + min-agg, each round fully
-    // shuffle-parallel; the driver only sees a one-scalar convergence
-    // check per round. Oracle: recursive transitive closure.
+    // deterministic 2% of orders). Spark side: Dedup.componentsFromEdges,
+    // the engine's one min-label propagation loop — O(diameter) rounds
+    // of join + min-agg, each round fully shuffle-parallel, a
+    // converge-or-throw check every second round. Oracle: recursive
+    // transitive closure.
     Decl("graph_components",
-      """WITH RECURSIVE pe AS (
-        |  SELECT DISTINCT a.l_suppkey AS x, b.l_suppkey AS y
-        |  FROM lineitem a JOIN lineitem b ON a.l_orderkey = b.l_orderkey
-        |  WHERE a.l_suppkey <> b.l_suppkey AND a.l_orderkey % 50 = 0),
+      s"""WITH RECURSIVE pe AS (
+        |  $sqlSupplierEdges),
         |ed AS (SELECT x, y FROM pe UNION SELECT y, x FROM pe),
         |reach(n, m) AS (
         |  SELECT x, y FROM ed
@@ -419,53 +419,15 @@ object Warehouse {
         |SELECT node, comp, count(*) OVER (PARTITION BY comp)
         |  AS comp_size
         |FROM comp ORDER BY node""".stripMargin) { (s, d) =>
-      val li = Tables.lineitem(s, d)
-        .filter(col("l_orderkey") % 50 === 0)
-        .select("l_orderkey", "l_suppkey")
-      val pairs = li.select(col("l_orderkey"), col("l_suppkey").as("x"))
-        .join(li.select(col("l_orderkey"), col("l_suppkey").as("y")),
-          "l_orderkey")
-        .filter(col("x") =!= col("y"))
-        .select("x", "y").distinct()
-      // pairs already contains both directions (the self-join emits
-      // (a,b) and (b,a)); pin it once — every round re-reads it. LAZY
-      // checkpoints (here and per round): every consumer is a full
-      // aggregate, so the first action materializes the blocks inside
-      // its own job instead of paying a dedicated eager pass — same
-      // one-job-per-round shape as the dedup components loop.
-      val edges = pairs.localCheckpoint(false)
-      var labels = edges.select(col("x").as("node")).distinct()
-        .select(col("node"), col("node").as("comp"))
-        .localCheckpoint(false)
-      // coalesce: SUM over an empty label set is NULL (an empty or
-      // fully-filtered partition must converge in 0 rounds, not NPE)
-      def labelSum = labels.agg(coalesce(sum("comp"), lit(0L)))
-        .head.getLong(0)
-      var sumPrev = -1L
-      var sumCur = labelSum
-      var rounds = 0
-      // min-label propagation: comp is componentwise nonincreasing and
-      // integral, so the label sum strictly decreases until fixpoint —
-      // equality IS convergence. Diameter-bounded round count (cap is a
-      // safety net, never the exit path on connected data).
-      while (sumCur != sumPrev && rounds < 20) {
-        val prop = labels.join(edges, col("node") === col("x"))
-          .select(col("y").as("node"), col("comp"))
-        labels = labels.unionAll(prop)
-          .groupBy("node").agg(min("comp").as("comp"))
-          .localCheckpoint(false) // materialized by labelSum below
-        sumPrev = sumCur
-        sumCur = labelSum
-        rounds += 1
-      }
-      // Exhausting the cap without reaching the fixpoint must be an
-      // error, not a silently-wrong labeling: a component whose
-      // eccentricity from its min-label node exceeds the cap would
-      // otherwise return labels that disagree with the transitive
-      // closure the oracle computes.
-      require(sumCur == sumPrev,
-        s"graph_components: label propagation not converged after " +
-          s"$rounds rounds (raise the cap for higher-diameter graphs)")
+      // one direction per undirected edge (supplierEdges holds both):
+      // componentsFromEdges adds the reverse itself
+      val ed = supplierEdges(s, d).filter(col("x") < col("y"))
+        .localCheckpoint(true)
+      val vertices = ed.select(col("x").as("doc_id"))
+        .union(ed.select(col("y").as("doc_id"))).distinct()
+      val labels = Dedup.componentsFromEdges(vertices,
+          ed.select(col("x").as("d1"), col("y").as("d2")))
+        .select(col("doc_id").as("node"), col("label").as("comp"))
       val w = Window.partitionBy("comp")
       labels.withColumn("comp_size", count(lit(1)).over(w))
         .orderBy("node")
@@ -486,10 +448,8 @@ object Warehouse {
     // rounds re-read a materialized frame instead of re-running the
     // co-order self-join per round.
     Decl("graph_pagerank",
-      """WITH pe AS (
-        |  SELECT DISTINCT a.l_suppkey AS x, b.l_suppkey AS y
-        |  FROM lineitem a JOIN lineitem b ON a.l_orderkey = b.l_orderkey
-        |  WHERE a.l_suppkey <> b.l_suppkey AND a.l_orderkey % 50 = 0),
+      s"""WITH pe AS (
+        |  $sqlSupplierEdges),
         |deg AS (SELECT x, COUNT(*) AS dg FROM pe GROUP BY x),
         |r0 AS (SELECT x AS node, CAST(1000000000000 AS BIGINT) AS r
         |       FROM deg),
@@ -548,10 +508,8 @@ object Warehouse {
     // oriented frame is pinned (localCheckpoint) because the wedge
     // join reads it twice and the closing join a third time.
     Decl("graph_triangles",
-      """WITH pe AS (
-        |  SELECT DISTINCT a.l_suppkey AS x, b.l_suppkey AS y
-        |  FROM lineitem a JOIN lineitem b ON a.l_orderkey = b.l_orderkey
-        |  WHERE a.l_suppkey <> b.l_suppkey AND a.l_orderkey % 50 = 0)
+      s"""WITH pe AS (
+        |  $sqlSupplierEdges)
         |SELECT e1.x AS node, COUNT(*) AS triangles
         |FROM pe e1
         |JOIN pe e2 ON e2.x = e1.x AND e1.y < e2.y
@@ -572,26 +530,19 @@ object Warehouse {
       // wedge (u→v, u→w) with ord(v) < ord(w); the closing edge {v,w}
       // — if it exists — is stored oriented v→w by transitivity of the
       // total order, so one equi-join probe closes the triangle.
-      // r17 (§2.4, the graph_jaccard pattern): the wedge SELF-join on
-      // u becomes a per-u out-neighbor array sorted by (dv, v) — the
-      // SAME comparator as the orientation's total order — whose
-      // ordered index pairs i < j are exactly ord(v) < ord(w),
-      // exploded map-side through two Generates. Same wedge multiset
-      // ⇒ identical triangles (oracle bit-identical tri-scale); only
-      // the closing-edge equi-join remains. Per-u adjacency memory is
+      // r17 (§2.4): the wedge SELF-join on u becomes a per-u
+      // out-neighbor array sorted by (dv, v) — the SAME comparator as
+      // the orientation's total order — expanded by Dedup.pairsWithin,
+      // so its pairs are exactly ord(v) < ord(w) (see its scaladoc).
+      // Same wedge multiset ⇒ identical triangles; only the
+      // closing-edge equi-join remains. Per-u adjacency memory is
       // out-degree-bounded, which the degree orientation itself caps
       // at O(√E).
       val closing = oriented.select(col("u").as("cv"), col("v").as("cw"))
-      val tri = oriented
-        .groupBy("u")
-        .agg(sort_array(collect_list(struct(col("dv"), col("v"))))
-          .as("ns"))
-        .select(col("u"), posexplode(col("ns")).as(Seq("i", "nv")),
-          col("ns"))
-        .select(col("u"), col("nv.v").as("v"),
-          explode(slice(col("ns"), col("i") + 2,
-            size(col("ns")) - col("i") - 1)).as("nw"))
-        .select(col("u"), col("v"), col("nw.v").as("w"))
+      val tri = Dedup.pairsWithin(oriented.groupBy("u")
+          .agg(sort_array(collect_list(struct(col("dv"), col("v"))))
+            .as("ns")), "ns", "u")
+        .select(col("u"), col("p1.v").as("v"), col("p2.v").as("w"))
         .join(closing, col("v") === col("cv") && col("w") === col("cw"))
       // one row per triangle → three per-node participation rows
       tri.select(explode(array(col("u"), col("v"), col("w"))).as("node"))
@@ -610,10 +561,8 @@ object Warehouse {
     // Σ deg², the triangle-counting bound; degree-cap or sampling
     // guards apply exactly as in graph_triangles.
     Decl("graph_jaccard",
-      """WITH pe AS (
-        |  SELECT DISTINCT a.l_suppkey AS x, b.l_suppkey AS y
-        |  FROM lineitem a JOIN lineitem b ON a.l_orderkey = b.l_orderkey
-        |  WHERE a.l_suppkey <> b.l_suppkey AND a.l_orderkey % 50 = 0),
+      s"""WITH pe AS (
+        |  $sqlSupplierEdges),
         |deg AS (SELECT x, COUNT(*) AS dg FROM pe GROUP BY x),
         |com AS (SELECT e1.x AS a, e2.x AS b, COUNT(*) AS common
         |  FROM pe e1 JOIN pe e2 ON e1.y = e2.y AND e1.x < e2.x
@@ -628,28 +577,23 @@ object Warehouse {
       // enumeration — degrees ride along and the post-aggregation
       // joins disappear (2 fewer shuffles than the join-back
       // formulation); deg_a/deg_b are constant per node, so first()
-      // under the pair groupBy is deterministic. r17 (§2.4, the
-      // cooccur_pmi pattern): the degree is a count() OVER
-      // (PARTITION BY x) instead of a groupBy+join-back, and the wedge
-      // SELF-join on y becomes a per-y adjacency array whose ordered
-      // pairs explode MAP-SIDE (edges are distinct ⇒ per-y x values
-      // are distinct ⇒ sorted index pairs i < j are exactly a < b).
-      // Same wedge multiset ⇒ identical common/deg/unions (oracle
-      // bit-identical tri-scale); the join and two exchanges are gone
-      // (graph_jaccard_{before,after}.txt). Per-y adjacency memory is
-      // max-degree-bounded — the standard adjacency-list layout.
+      // under the pair groupBy is deterministic. r17 (§2.4): the
+      // degree is a count() OVER (PARTITION BY x) instead of a
+      // groupBy+join-back, and the wedge SELF-join on y becomes a per-y
+      // adjacency array expanded MAP-SIDE by Dedup.pairsWithin (edges
+      // are distinct ⇒ per-y x values are distinct ⇒ its pairs are
+      // exactly a < b — see its scaladoc). Same wedge multiset ⇒
+      // identical common/deg/unions; the join and two exchanges are
+      // gone (graph_jaccard_{before,after}.txt). Per-y adjacency
+      // memory is max-degree-bounded — the standard adjacency-list
+      // layout.
       val edN = ed.withColumn("dg",
         count(lit(1)).over(Window.partitionBy("x")))
-      val com = edN
-        .groupBy("y")
-        .agg(sort_array(collect_list(struct(col("x"), col("dg"))))
-          .as("ns"))
-        .select(posexplode(col("ns")).as(Seq("i", "na")), col("ns"))
-        .select(col("na.x").as("a"), col("na.dg").as("deg_a"),
-          explode(slice(col("ns"), col("i") + 2,
-            size(col("ns")) - col("i") - 1)).as("nb"))
-        .select(col("a"), col("deg_a"),
-          col("nb.x").as("b"), col("nb.dg").as("deg_b"))
+      val com = Dedup.pairsWithin(edN.groupBy("y")
+          .agg(sort_array(collect_list(struct(col("x"), col("dg"))))
+            .as("ns")), "ns")
+        .select(col("p1.x").as("a"), col("p1.dg").as("deg_a"),
+          col("p2.x").as("b"), col("p2.dg").as("deg_b"))
         .groupBy("a", "b")
         .agg(count(lit(1)).as("common"), first("deg_a").as("deg_a"),
           first("deg_b").as("deg_b"))
@@ -733,7 +677,7 @@ object Warehouse {
 
   /** Symmetric, deduplicated supplier co-order edge set (suppliers
     * linked when they serve the same order; sparsified to the
-    * deterministic 2% of orders) — the shared input of the three graph
+    * deterministic 2% of orders) — the shared input of the four graph
     * operators. The self-join emits both (a,b) and (b,a), so the
     * result is symmetric without an explicit union. */
   private[graft] def supplierEdges(s: SparkSession, d: String): DataFrame = {
@@ -746,6 +690,14 @@ object Warehouse {
       .filter(col("x") =!= col("y"))
       .select("x", "y").distinct()
   }
+
+  /** DuckDB twin of [[supplierEdges]]: the `pe` CTE body every graph
+    * oracle interpolates. A def, not a val: the Decl list above reads
+    * it during object initialization. */
+  private def sqlSupplierEdges: String =
+    """SELECT DISTINCT a.l_suppkey AS x, b.l_suppkey AS y
+      |  FROM lineitem a JOIN lineitem b ON a.l_orderkey = b.l_orderkey
+      |  WHERE a.l_suppkey <> b.l_suppkey AND a.l_orderkey % 50 = 0""".stripMargin
 
   /** Write orders + lineitem as bucketed/sorted tables once per
     * (session, sf dir); returns the two table names. Bucket count 8 on

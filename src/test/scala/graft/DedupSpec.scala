@@ -370,6 +370,67 @@ class DedupSpec extends AnyFunSuite with SparkSuite {
     val saltedSet = saltedPairs.map(p => (p._1, p._3)).toSeq
     assert(saltedSet.sorted == naive.sorted,
       s"salted (${saltedSet.length}) != naive (${naive.length}) pair bag")
+
+    // bucketPairs end to end over buckets of 1, 2 and 3 rows (the
+    // pairsWithin slice bounds at i = size - 1) and on both sides of
+    // BucketCap (grouped vs salted path); docs 2 and 5 share a 2-row
+    // and a 3-row bucket, so their pair must come out once. Ids are
+    // scrambled so insertion order disagrees with id order.
+    val sizes = Seq(1, 2, 3, Dedup.BucketCap, Dedup.BucketCap + 1)
+    val edge = sizes.zipWithIndex.flatMap { case (n, b) =>
+      (0 until n).map(i => (b.toLong, s"e$b", (i * 7919L + 13L * b) % 100003L))
+    } ++ Seq((5L, "s5", 5L), (5L, "s5", 2L),
+      (6L, "s6", 9L), (6L, "s6", 5L), (6L, "s6", 2L))
+    val edgeDf = edge.toDF("band", "bhash", "doc_id")
+      .withColumn("payload", col("doc_id") * 10)
+    val got = Dedup.bucketPairs(edgeDf, Seq("band", "bhash"),
+        Seq("doc_id", "payload"))
+      .select("doc_id_1", "payload_1", "doc_id_2", "payload_2").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+      .toSeq
+    val want = edgeDf.select(col("band"), col("bhash"), col("doc_id").as("da"),
+        col("payload").as("pa"))
+      .join(edgeDf.select(col("band"), col("bhash"), col("doc_id").as("db"),
+        col("payload").as("pb")), Seq("band", "bhash"))
+      .filter(col("da") < col("db"))
+      .select("da", "pa", "db", "pb").distinct().collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+      .toSeq
+    assert(want.contains((2L, 20L, 5L, 50L)), "shared pair must be present")
+    assert(want.length == sizes.map(n => n * (n - 1) / 2).sum + 1 + 3 - 1,
+      s"naive pair count ${want.length}")
+    assert(got.sorted == want.sorted,
+      s"bucketPairs (${got.length}) != naive (${want.length}) pair set")
+  }
+
+  test("componentsFromEdges converges to min-id labels within its round " +
+    "cap, throws past it, and is direction-agnostic") {
+    import spark.implicits._
+    def path(n: Int) = (0L until n - 1L).map(i => (i, i + 1)).toDF("d1", "d2")
+    def ids(n: Int) = spark.range(n).select(col("id").as("doc_id"))
+    def labelsOf(v: org.apache.spark.sql.DataFrame,
+        e: org.apache.spark.sql.DataFrame) =
+      Dedup.componentsFromEdges(v, e).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // label 0 needs n - 1 propagation rounds to reach the far end of an
+    // n-node path: 60 nodes are past the 50-round cap, 40 are within it
+    val e = intercept[IllegalArgumentException](labelsOf(ids(60), path(60)))
+    assert(e.getMessage.contains("did not converge in 50 rounds"),
+      e.getMessage)
+    val within = labelsOf(ids(40), path(40))
+    assert(within == (0L until 40L).map(_ -> 0L).toMap, within)
+    // a forest with singletons; each edge given once vs in both
+    // directions (graph_components feeds one, symmetric edge sets two)
+    val forest = Seq((3L, 1L), (1L, 7L), (9L, 8L), (12L, 10L), (10L, 11L),
+      (11L, 12L)).toDF("d1", "d2")
+    val both = forest.unionByName(
+      forest.select(col("d2").as("d1"), col("d1").as("d2")))
+    val verts = spark.range(14).select(col("id").as("doc_id"))
+    val one = labelsOf(verts, forest)
+    assert(one == Map(0L -> 0L, 1L -> 1L, 2L -> 2L, 3L -> 1L, 4L -> 4L,
+      5L -> 5L, 6L -> 6L, 7L -> 1L, 8L -> 8L, 9L -> 8L, 10L -> 10L,
+      11L -> 10L, 12L -> 10L, 13L -> 13L), one)
+    assert(labelsOf(verts, both) == one)
   }
 
   test("jaccard of injected dup pair is 1.0 through the verify stage") {

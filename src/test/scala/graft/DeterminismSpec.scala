@@ -16,8 +16,8 @@ class DeterminismSpec extends AnyFunSuite with SparkSuite {
     "join_asof",          // per-(key,ts) dedup + tag ordering
     "join_asof_forward",
     "topk",               // boundary ties
-    "dedup_near",         // hash family + collect_list bucket order
-    "dedup_simhash",      // collect_list bucket order
+    "dedup_near",         // hash family + bucket split/salt routing
+    "dedup_simhash",      // hash family + bucket split/salt routing
     "text_fingerprint",   // hash + sliding min
     "sim_ann_lsh",        // bucket assignment
     "sim_ann_ivf",        // cell argmax ties
